@@ -1,9 +1,9 @@
 """URL canonicalization — implemented twice, on purpose.
 
 ``canonicalize_py`` is the sequential reference-semantics version used by the
-crawl oracle/simulator; ``with_canonical_url`` is the Spark column-expression
-version used by the engine (pure ``pyspark.sql.functions`` — stays inside
-whole-stage codegen, no Python in the hot path). Both implement the SAME
+crawl oracle/simulator; ``canonical_url_col`` is the Spark column-expression
+version used by the engine (pure ``pyspark.sql.functions`` — no Python in
+the hot path; see its docstring for the bind-once rule). Both implement the SAME
 bounded algorithm, so a property test can assert byte-equality over any URL
 corpus; that equality is what makes the engine's seen-set match the oracle's
 (the reference's dedup key is the extracted id string,
@@ -210,16 +210,35 @@ def _pct_normalize_col(u: Column) -> Column:
     return F.when(F.contains(u, F.lit("%")), norm).otherwise(u)
 
 
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row.
+
+    A Python ``Column`` is an expression tree, not a value: every reference
+    to it copies the whole subtree into the plan, and Catalyst evaluates
+    each copy. Passing the value through a one-element ``transform`` binds
+    it to a lambda variable, so ``body`` may reference it any number of
+    times at the cost of a variable lookup."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def canonical_url_col(url: Column) -> Column:
     """Spark column-expression canonicalizer (engine side).
 
     Same normalization spec as :func:`canonicalize_py` (property-tested for
-    byte-equality over the URL corpus), but engineered for per-row cost: the
-    first version chained ~30 regexp layers whose expression tree Catalyst
-    re-inlined at every reference (~2.3 core-ms/row measured at 1M rows).
-    This version extracts scheme/authority/path/query with ONE regex each and
-    resolves "."/".." segments with a single array fold
-    (split + ``aggregate``), all JVM-side under whole-stage codegen.
+    byte-equality over the URL corpus), but engineered for per-row cost:
+    scheme/authority/path/query come from ONE regex each, and "."/".."
+    segments resolve in a single array fold (split + ``aggregate``), all
+    JVM-side with no Python.
+
+    Bind-once rule: every intermediate value referenced more than once is
+    bound with :func:`_let` and used through its lambda variable. Written
+    as plain Python variables instead, each reference copies its subtree:
+    the optimized plan over one column held 15 ``regexp_extract`` and 19
+    ``aggregate`` calls instead of 3 and 2, and every copy runs per row.
+    ``tests/test_canonicalize.py`` asserts each regex appears once.
+    (Catalyst still copies the whole expression into a null filter pushed
+    below it; the crawl round avoids that by canonicalizing the links
+    array before exploding it.)
 
     The fold resolves dot-segments to ANY depth; the Python side is bounded
     by MAX_DOT_DEPTH passes — they agree on every URL whose traversal depth
@@ -231,23 +250,32 @@ def canonical_url_col(url: Column) -> Column:
     # an explicit character set is a native StringTrim — no regex pass on the
     # hot path (the r3 ^\s+|\s+$ regexp_replace here cost a full JVM-regex
     # scan per discovered URL per round)
-    u = F.regexp_replace(F.btrim(url, F.lit(" \t\n\x0b\f\r")), r"#.*$", "")
-    u = _pct_normalize_col(u)
-    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
-    authority = F.lower(F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1))
-    authority = (
-        F.when(scheme == "http", F.regexp_replace(authority, r":80$", ""))
-        .when(scheme == "https", F.regexp_replace(authority, r":443$", ""))
-        .otherwise(authority)
-    )
-    path_raw = F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?]*)", 1)
-    query = F.coalesce(F.get(F.split(u, r"\?", 2), 1), F.lit(""))
+    stripped = F.regexp_replace(F.btrim(url, F.lit(" \t\n\x0b\f\r")), r"#.*$", "")
+    return _let(stripped, lambda s: _let(_pct_normalize_col(s), _split_and_assemble))
 
+
+def _split_and_assemble(u: Column) -> Column:
+    """Canonical form of a stripped, percent-normalized URL (bound once)."""
+    parts = F.struct(
+        F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1)).alias("scheme"),
+        F.lower(F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1)).alias("auth"),
+        F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?]*)", 1).alias("path"),
+        F.coalesce(F.get(F.split(u, r"\?", 2), 1), F.lit("")).alias("query"),
+    )
+    return _let(parts, _assemble)
+
+
+def _assemble(p: Column) -> Column:
+    scheme, path_raw, query = p["scheme"], p["path"], p["query"]
+    authority = (
+        F.when(scheme == "http", F.regexp_replace(p["auth"], r":80$", ""))
+        .when(scheme == "https", F.regexp_replace(p["auth"], r":443$", ""))
+        .otherwise(p["auth"])
+    )
     # dot-segment + duplicate-slash resolution as one left fold over the
     # segments: '' (duplicate slash) and '.' drop, '..' pops, else push.
-    segs = F.split(path_raw, "/")
     kept = F.aggregate(
-        segs,
+        F.split(path_raw, "/"),
         F.array().cast("array<string>"),
         lambda acc, x: F.when(
             x == "..", F.slice(acc, 1, F.greatest(F.size(acc) - 1, F.lit(0)))
@@ -255,24 +283,28 @@ def canonical_url_col(url: Column) -> Column:
         .when((x == "") | (x == "."), acc)
         .otherwise(F.concat(acc, F.array(x))),
     )
-    # a path ending in '/', '/.' or '/..' canonicalizes with a trailing slash
-    trailing = path_raw.rlike(r"(/|/\.|/\.\.)$")
-    path = F.when(F.size(kept) == 0, F.lit("/")).otherwise(
-        F.concat(
-            F.lit("/"),
-            F.array_join(kept, "/"),
-            F.when(trailing, F.lit("/")).otherwise(F.lit("")),
+
+    def finish(r: Column) -> Column:
+        # a path ending in '/', '/.' or '/..' canonicalizes with a trailing slash
+        trailing = path_raw.rlike(r"(/|/\.|/\.\.)$")
+        path = F.when(F.size(r["kept"]) == 0, F.lit("/")).otherwise(
+            F.concat(
+                F.lit("/"),
+                F.array_join(r["kept"], "/"),
+                F.when(trailing, F.lit("/")).otherwise(F.lit("")),
+            )
         )
-    )
-    sorted_query = F.array_join(F.array_sort(F.split(query, "&")), "&")
-    canon = F.concat(
-        scheme,
-        F.lit("://"),
-        authority,
-        path,
-        F.when(query == "", F.lit("")).otherwise(F.concat(F.lit("?"), sorted_query)),
-    )
-    return F.when((scheme == "") | (authority == ""), F.lit(None)).otherwise(canon)
+        sorted_query = F.array_join(F.array_sort(F.split(query, "&")), "&")
+        canon = F.concat(
+            scheme,
+            F.lit("://"),
+            r["auth"],
+            path,
+            F.when(query == "", F.lit("")).otherwise(F.concat(F.lit("?"), sorted_query)),
+        )
+        return F.when((scheme == "") | (r["auth"] == ""), F.lit(None)).otherwise(canon)
+
+    return _let(F.struct(authority.alias("auth"), kept.alias("kept")), finish)
 
 
 def host_col(url_canon: Column) -> Column:

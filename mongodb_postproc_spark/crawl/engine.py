@@ -10,9 +10,9 @@ byte-identical fetch order:
            ──(broadcast robots join: politeness slots)──► offset_ms
            ──(distributed global rank, ordering.py)──► seq
            ──(mapInPandas fetch: Arrow batches, no per-row Python)──► pages
-           ──(posexplode links → canonicalize)──► candidates
+           ──(canonicalize links → posexplode)──► candidates
            ──(bucketed dedup + sliced-Bloom probe + sliced exact confirm)──► new URLs
-           ──(robots split)──► frontier appends / blocked
+           ──(broadcast robots join: blocked flag)──► frontier appends / blocked
   all state committed per round through the snapshot catalog (tables.py);
   _state.json (written last, atomic) pins the consistent snapshot set for
   exact checkpoint/resume with per-partition lineage.
@@ -59,6 +59,7 @@ import json
 import os
 import tempfile
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pandas as pd
@@ -320,23 +321,24 @@ class CrawlEngine:
 
     def _robots_df(self) -> DataFrame:
         # memoized per engine: the rules are a pure function of the web
-        # config, and regenerating + re-shipping the LocalRelation every
-        # round is serial driver time (at a real million-host web this
-        # becomes a proper broadcast table loaded once, not per round)
+        # config (at a real million-host web this becomes a proper
+        # broadcast table loaded once, not per round).
+        # Built from pandas through Arrow so the plan holds a LocalRelation:
+        # createDataFrame(list) goes through sc.parallelize instead, and
+        # every broadcast of that Python-RDD relation re-ran a Python job.
         cached = getattr(self, "_robots_df_cache", None)
         if cached is not None:
             return cached
         rows = SyntheticWeb(self.cfg.web).robots_rows()
-        data = [
-            (
-                r["host"],
-                [(u["pattern"], u["allow"], u["plen"]) for u in r["rules"]],
-                r["crawl_delay_ms"],
-            )
-            for r in rows
-        ]
+        pdf = pd.DataFrame({
+            "host": [r["host"] for r in rows],
+            "rules": [
+                [(u["pattern"], u["allow"], u["plen"]) for u in r["rules"]] for r in rows
+            ],
+            "crawl_delay_ms": [r["crawl_delay_ms"] for r in rows],
+        })
         self._robots_df_cache = self.spark.createDataFrame(
-            data, f"host string, rules {self.RULES_T}, crawl_delay_ms long"
+            pdf, f"host string, rules {self.RULES_T}, crawl_delay_ms long"
         )
         return self._robots_df_cache
 
@@ -374,14 +376,14 @@ class CrawlEngine:
         )
         return best.isNotNull() & (best["a"] == 0)
 
-    def _split_robots(self, df: DataFrame, robots: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """(allowed, blocked) — broadcast hash join + native rule evaluator."""
-        joined = df.join(
-            F.broadcast(robots.select("host", "rules")), "host", "left"
-        ).withColumn("__blocked", self._blocked_col())
-        allowed = joined.filter(~F.col("__blocked")).drop("__blocked", "rules")
-        blocked = joined.filter(F.col("__blocked")).drop("__blocked", "rules")
-        return allowed, blocked
+    def _with_blocked(self, df: DataFrame) -> DataFrame:
+        """``df`` plus a non-null boolean ``__blocked`` (broadcast hash join
+        + native rule evaluator). Callers add it to the plan they
+        materialize anyway, so the allowed and blocked sinks filter on the
+        stored flag instead of each re-running the join."""
+        return df.join(
+            F.broadcast(self._robots_df().select("host", "rules")), "host", "left"
+        ).withColumn("__blocked", self._blocked_col()).drop("rules")
 
     # ---------------------------------------------------------------- seen
     def _bucket_col(self):
@@ -411,7 +413,7 @@ class CrawlEngine:
                         rows.extend({"bloom_bytes": v.as_py()} for v in t.column("bloom_bytes"))
         return merge_state(rows) or None
 
-    def _dedup_filter_unseen(self, candidates: DataFrame, seen: DataFrame,
+    def _dedup_filter_unseen(self, candidates: DataFrame, seen: DataFrame | None,
                              state: dict) -> DataFrame:
         """First-discovery dedup of raw link candidates + exact-unseen subset.
 
@@ -433,7 +435,9 @@ class CrawlEngine:
         tests/test_seen_bloom.py::test_round_plan_never_scans_seen).
         ``broadcast`` keeps the merged-filter pandas UDF + exact anti-join
         for small deployments; legacy flat-layout seen tables fall back to
-        the anti-join confirmer too."""
+        the anti-join confirmer too. Only those anti-join paths use
+        ``seen``; ``None`` reads it from ``state`` when one of them runs
+        (the read alone costs a listing job over every bucket dir)."""
         deduped = (
             candidates.groupBy("url_canon")
             .agg(
@@ -469,6 +473,7 @@ class CrawlEngine:
                 # against the aligned bucket slices — no seen scan/join in
                 # this plan at all
                 return probed.filter(~F.col("seen")).select(*FRONTIER_COLS)
+            seen = self._read("seen", state) if seen is None else seen
             definite_new = probed.filter(~F.col("maybe_seen")).select(*FRONTIER_COLS)
             confirmed_new = (
                 probed.filter(F.col("maybe_seen"))
@@ -476,6 +481,7 @@ class CrawlEngine:
                 .join(seen, "url_canon", "left_anti")
             )
             return definite_new.unionByName(confirmed_new)
+        seen = self._read("seen", state) if seen is None else seen
         blooms = self._load_bloom_broadcast(state) if self.use_bloom else None
         if not blooms:
             return deduped.join(seen, "url_canon", "left_anti")
@@ -507,7 +513,7 @@ class CrawlEngine:
         )
         return definite_new.unionByName(confirmed_new)
 
-    def _idn_fix(self, new_urls: DataFrame, seen: DataFrame, state: dict) -> DataFrame:
+    def _idn_fix(self, new_urls: DataFrame, seen: DataFrame | None, state: dict) -> DataFrame:
         """IDN (punycode) key normalization — the observation-gated rare path.
 
         Runs only in rounds where the free ``observe`` counter saw non-ASCII
@@ -667,19 +673,19 @@ class CrawlEngine:
             idn_normalize_urls(seeds.filter(~ascii_ok))
         )
         w = Window.partitionBy("url_canon").orderBy("discovery_ts")
-        seeds = (
+        seeds = self._with_blocked(
             seeds.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
-            .localCheckpoint(eager=False)  # canonicalize+dedup once, not per write
-        )
-        allowed, blocked = self._split_robots(seeds.select(*FRONTIER_COLS), self._robots_df())
+            .select(*FRONTIER_COLS)
+        ).localCheckpoint(eager=False)  # canonicalize+dedup+robots once, not per write
 
         tm.mark("seed_gen")
         obs_seen = Observation("init_seen")
         obs_blocked = Observation("init_blocked")
         self.catalog.create_or_replace(
             "frontier",
-            allowed.select(*FRONTIER_COLS)
+            seeds.filter(~F.col("__blocked"))
+            .select(*FRONTIER_COLS)
             .withColumn("attempts", F.lit(0))
             .withColumn("fkey", _fkey_col())
             .select(*FRONTIER_TABLE_COLS),
@@ -693,7 +699,9 @@ class CrawlEngine:
         )
         self.catalog.create_or_replace(
             "blocked",
-            blocked.observe(obs_blocked, F.count(F.lit(1)).alias("n")).select("url_canon"),
+            seeds.filter(F.col("__blocked"))
+            .observe(obs_blocked, F.count(F.lit(1)).alias("n"))
+            .select("url_canon"),
         )
         tm.mark("seed_writes")
         self._append_seen_state(seeds.select("url_canon"), epoch=-1)
@@ -762,8 +770,6 @@ class CrawlEngine:
         elif frontier.isEmpty():
             return None
         tm.mark("frontier_empty_check")
-        seen = self._read("seen", state)
-        robots = self._robots_df()
         cap = self.cfg.per_host_cap
 
         # -- schedule: salted partial top-k defuses hot-host window skew,
@@ -790,7 +796,7 @@ class CrawlEngine:
         sched = (
             pre.withColumn("__hr", F.row_number().over(w_host))
             .filter(F.col("__hr") <= cap)
-            .join(F.broadcast(robots.select("host", "crawl_delay_ms")), "host", "left")
+            .join(F.broadcast(self._robots_df().select("host", "crawl_delay_ms")), "host", "left")
             .withColumn(
                 "offset_ms",
                 (F.col("__hr") - 1) * F.coalesce(F.col("crawl_delay_ms"), F.lit(100)),
@@ -808,8 +814,6 @@ class CrawlEngine:
         # path at every parallelism — pure serial-floor at 4N cores).
         sched = sched.localCheckpoint(eager=True)
         tm.mark("schedule_only")
-        from concurrent.futures import ThreadPoolExecutor
-
         side_pool = ThreadPoolExecutor(max_workers=2)
         fut_frontier_delete = side_pool.submit(
             self.catalog.append_deletes,
@@ -825,30 +829,19 @@ class CrawlEngine:
         #    never re-serialized, and the file listing stays O(round), not
         #    O(all rounds). Round totals ride on observe — no count job.
         obs_pages = Observation(f"r{rnd}_pages")
-        # explicit round-robin repartition: the scheduler's range partitions
-        # are sized for the SORT (bytes), but the fetch stage is
-        # compute-bound per row — AQE's byte-based coalescing would leave
-        # cores idle (measured: 10 partitions on 16 cores = 38% of the
-        # round's wall). 3x parallelism evens out synth-cost variance
-        # between (w,h)/format mixes; rows are ~60 bytes, the shuffle is
-        # noise next to the per-row work it balances.
         # explicit round-robin repartition to exactly one task per core: the
         # scheduler's range partitions are sized for the SORT (bytes), but
         # the fetch stage is compute-bound per row — AQE's byte-based
         # coalescing left 10 partitions on 16 cores (38% of round wall
         # idle). One large task per core also keeps the Arrow batches big
         # enough for the generator's (w,h)-stacked vectorization; measured
-        # 16 > 48 > 10 partitions at 16 cores (28s vs 79s vs 52s).
-        fetch_mult = int(os.environ.get("SPARK_GRAFT_FETCH_PARTS_MULT", "1"))
-        fetch_in = sched.select(
-            "seq", "url_canon", "host", "depth", "priority", "discovery_ts", "attempts"
-        )
-        if fetch_mult > 0:
-            fetch_in = fetch_in.repartition(
-                fetch_mult * self.spark.sparkContext.defaultParallelism
-            )
+        # 16 > 48 > 10 partitions at 16 cores (28s vs 79s vs 52s). Rows are
+        # ~60 bytes: the shuffle is noise next to the per-row work it balances.
         fetched = (
-            fetch_in
+            sched.select(
+                "seq", "url_canon", "host", "depth", "priority", "discovery_ts", "attempts"
+            )
+            .repartition(self.spark.sparkContext.defaultParallelism)
             .mapInPandas(_fetch_factory(self.cfg, rnd), FETCH_SCHEMA)
             .observe(
                 obs_pages,
@@ -937,10 +930,17 @@ class CrawlEngine:
                 F.lit(rnd).alias("round"),
             )
 
-        # -- extract + canonicalize (dedup happens fused with the seen probe)
+        # -- extract + canonicalize (dedup happens fused with the seen probe).
+        #    Canonicalizing the links array BEFORE the explode keeps the null
+        #    filter from being pushed below the canonicalizer, which would
+        #    evaluate it twice per link; positions are unchanged, so
+        #    link_index still names the raw link.
         children = (
-            results.select("seq", "depth", F.posexplode("links").alias("link_index", "raw_url"))
-            .withColumn("url_canon", canonical_url_col(F.col("raw_url")))
+            results.select(
+                "seq", "depth",
+                F.posexplode(F.transform("links", canonical_url_col))
+                .alias("link_index", "url_canon"),
+            )
             .filter(F.col("url_canon").isNotNull())
             .withColumn(
                 "discovery_ts",
@@ -952,12 +952,15 @@ class CrawlEngine:
         )
 
         # -- first-discovery dedup + seen-set check (bucketed Bloom probe +
-        #    exact anti-join confirmer), one materialization for all sinks
-        # the IDN gate rides the checkpoint job as an observe metric — an
-        # all-ASCII web (the common case) pays zero extra jobs for step 9
+        #    exact anti-join confirmer), one materialization for all sinks.
+        # The robots flag rides the same materialization, so the frontier
+        # and blocked sinks filter on it instead of each re-running the join;
+        # only the IDN rewrite (new url_canon and host) computes it again.
+        # The IDN gate rides the checkpoint job as an observe metric — an
+        # all-ASCII web (the common case) pays zero extra jobs for step 9.
         obs_idn = Observation(f"r{rnd}_idn")
         new_urls = (
-            self._dedup_filter_unseen(children, seen, state)
+            self._with_blocked(self._dedup_filter_unseen(children, None, state))
             .observe(
                 obs_idn,
                 F.sum((~is_ascii_col("url_canon")).cast("long")).alias("n_idn"),
@@ -965,9 +968,10 @@ class CrawlEngine:
             .localCheckpoint(eager=True)
         )
         if int(obs_idn.get["n_idn"] or 0):
-            new_urls = self._idn_fix(new_urls, seen, state).localCheckpoint(eager=True)
+            new_urls = self._with_blocked(
+                self._idn_fix(new_urls.select(*FRONTIER_COLS), None, state)
+            ).localCheckpoint(eager=True)
         tm.mark("extract+dedup+unseen")
-        allowed_new, blocked_new = self._split_robots(new_urls, robots)
 
         # -- commit next state through the catalog (order-safe: _state.json
         #    last, so a crash mid-commit resumes from the previous round).
@@ -1009,7 +1013,7 @@ class CrawlEngine:
         def _commit_blocked():
             self.catalog.append(
                 "blocked",
-                blocked_new.observe(
+                new_urls.filter(F.col("__blocked")).observe(
                     obs_blocked, F.count(F.lit(1)).alias("n")
                 ).select("url_canon"),
             )
@@ -1023,7 +1027,8 @@ class CrawlEngine:
         def _commit_frontier():
             fut_frontier_delete.result()
             front_new = (
-                allowed_new.select(*FRONTIER_COLS)
+                new_urls.filter(~F.col("__blocked"))
+                .select(*FRONTIER_COLS)
                 .withColumn("attempts", F.lit(0))
                 .withColumn("fkey", _fkey_col())
                 .select(*FRONTIER_TABLE_COLS)
@@ -1036,9 +1041,8 @@ class CrawlEngine:
             self._append_seen_state(new_urls.select("url_canon"), epoch=rnd)
 
         def _commit_failed():
-            self.catalog.append("failed", dead_rows)
-
-        from concurrent.futures import ThreadPoolExecutor
+            # the first dead-letter round creates the table
+            self._upsert("failed", dead_rows)
 
         commits = [_commit_seen, _commit_blocked, _commit_frontier, _commit_seen_state]
         if dead_rows is not None:

@@ -40,6 +40,7 @@ partition within ~2x of the mean.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -117,8 +118,11 @@ def assign_global_seq(
     for b in sorted(counts):
         offsets[b] = acc
         acc += counts[b]
+    # from pandas through Arrow, so the broadcast side plans as a
+    # LocalRelation instead of a Python RDD that re-runs a job per use
     off_df = spark.createDataFrame(
-        [(b, off) for b, off in offsets.items()] or [(0, start)], "__b int, __off long"
+        pd.DataFrame({"__b": list(offsets) or [0], "__off": list(offsets.values()) or [start]}),
+        "__b int, __off long",
     )
     w = Window.partitionBy("__b").orderBy(*keys)
     return (

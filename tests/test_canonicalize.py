@@ -97,3 +97,20 @@ def test_host_extraction(spark):
     for u, h in zip(out["u"], out["h"]):
         assert h == host_py(u)
     assert host_py("http://h:8080/p") == "h"
+
+
+def test_plan_holds_each_regex_once(spark):
+    """Bind-once rule (canonical_url_col's docstring): every shared
+    intermediate is bound to a lambda variable, so the optimized plan of the
+    canonicalizer over one column holds each of its regexes and folds once.
+    Plain Python variables put 15 regexp_extract and 19 aggregate copies
+    into this plan."""
+    plan = (
+        spark.createDataFrame([("http://a.test/x",)], "raw string")
+        .select(canonical_url_col(F.col("raw")).alias("u"))
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert plan.count("regexp_extract(") == 3, plan
+    for rx in (r"#.*$", r":80$", r":443$"):
+        assert plan.count(rx) == 1, (rx, plan)
+    assert plan.count("aggregate(") == 2, plan

@@ -1,5 +1,7 @@
 """assign_global_seq must equal the sequential rank at ANY parallelism."""
 
+import re
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -27,3 +29,11 @@ def test_single_row_and_empty(spark):
     df = spark.createDataFrame(pd.DataFrame({"k1": [1], "k2": ["a"]}))
     out = assign_global_seq(df, ["k1", "k2"]).collect()
     assert out[0]["seq"] == 0
+
+
+def test_offsets_table_plans_as_local_relation(spark):
+    """The bucket-offset table is built through Arrow: a LocalRelation in the
+    plan, not a Python RDD that re-runs a job every time it is broadcast."""
+    df = spark.createDataFrame(pd.DataFrame({"k1": [3, 1, 2], "k2": ["c", "a", "b"]}))
+    plan = assign_global_seq(df, ["k1", "k2"])._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(r"LocalRelation \[__b#\d+, __off#\d+L\]", plan), plan

@@ -77,3 +77,21 @@ def test_null_rules_allowed(spark):
         pd.DataFrame({"url_canon": ["http://h.test/private/x"]})
     ).withColumn("rules", F.lit(None).cast(CrawlEngine.RULES_T))
     assert df.withColumn("b", CrawlEngine._blocked_col()).collect()[0]["b"] is False
+
+
+def test_robots_table_plans_as_local_relation(spark, tmp_path):
+    """The robots table is built through Arrow: a LocalRelation in the plan
+    (no Python RDD job per broadcast), holding exactly the web's rules."""
+    from mongodb_postproc_spark.datagen.web import CrawlConfig, SyntheticWeb, WebConfig
+
+    cfg = CrawlConfig(web=WebConfig(n_hosts=7, seed="robots-lr-v1"))
+    robots = CrawlEngine(spark, cfg, str(tmp_path))._robots_df()
+    plan = robots._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+    got = {r["host"]: (r["rules"], r["crawl_delay_ms"]) for r in robots.collect()}
+    want = {
+        r["host"]: ([(u["pattern"], u["allow"], u["plen"]) for u in r["rules"]],
+                    r["crawl_delay_ms"])
+        for r in SyntheticWeb(cfg.web).robots_rows()
+    }
+    assert {h: ([tuple(u) for u in rules], d) for h, (rules, d) in got.items()} == want

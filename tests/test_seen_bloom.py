@@ -179,3 +179,29 @@ def test_broadcast_resume_with_different_geometry(spark, tmp_path):
     assert {r["url_canon"] for r in eng.seen_set().collect()} == {
         r["url_canon"] for r in exact.seen_set().collect()
     }
+
+
+def test_bucketed_round_never_reads_seen(spark, tmp_path):
+    """The bucketed probe confirms against seen's bucket slices straight
+    from parquet, so a round on the bucketed layout must not read the seen
+    table through the catalog at all (the read alone lists every bucket
+    dir in a Spark job)."""
+    cfg = CrawlConfig(
+        n_seeds=6, max_rounds=1, per_host_cap=3,
+        web=WebConfig(n_hosts=4, hot_pages=30, cold_pages=10, seed="noseenread-v1"),
+    )
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "wd"), n_buckets=4)
+    eng.init_crawl()
+    assert eng.catalog.partition_layout("seen") == "bucket"
+    reads = []
+    real_read = eng.catalog.read
+
+    def spy(name, *a, **kw):
+        reads.append(name)
+        return real_read(name, *a, **kw)
+
+    eng.catalog.read = spy
+    _, stats = eng.run_round(eng.load_state())
+    assert stats.new_urls > 0
+    assert "frontier" in reads  # the spy sees the round's reads
+    assert "seen" not in reads, reads

@@ -140,3 +140,26 @@ def test_resume_mid_crawl_matches_oracle(oracle, spark, tmp_path_factory):
     assert {
         r["url_canon"]: r["status"] for r in eng2.failed_set().collect()
     } == oracle.failed
+
+
+def test_first_dead_letter_round_creates_failed_table(spark, tmp_path):
+    """Init creates no `failed` table, so the first round that dead-letters
+    must create it. Iceberg's writeTo().append() refuses a missing table;
+    a catalog whose append does the same must still land every failed row
+    (round 1 of this config is the first to dead-letter, round 2 appends)."""
+    from dataclasses import replace
+
+    cfg = replace(CFG, max_rounds=3)
+    want = simulate_crawl(cfg).failed
+    assert want
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "wd"))
+    real_append = eng.catalog.append
+
+    def strict_append(name, *a, **kw):
+        if not eng.catalog.exists(name):
+            raise RuntimeError(f"append to missing table {name!r}")
+        return real_append(name, *a, **kw)
+
+    eng.catalog.append = strict_append
+    eng.run()
+    assert {r["url_canon"]: r["status"] for r in eng.failed_set().collect()} == want

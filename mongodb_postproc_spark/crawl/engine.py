@@ -15,7 +15,9 @@ byte-identical fetch order:
            ──(broadcast robots join: blocked flag)──► frontier appends / blocked
   all state committed per round through the snapshot catalog (tables.py);
   _state.json (written last, atomic) pins the consistent snapshot set for
-  exact checkpoint/resume with per-partition lineage.
+  exact checkpoint/resume with per-partition lineage. It carries a format
+  stamp (STATE_FORMAT): a workdir of another format is refused, never
+  migrated, and only run(resume=False) starts it over.
 
 Skew: the hot host dominates the frontier (30% of links). The scheduling
 window partitions by host, so before the exact per-host top-k we take a
@@ -45,7 +47,9 @@ from seen_state, and for bloom-positive rows the exact URL slice from the
 bucket-partitioned seen table — straight from parquet (seen.py). Nothing is
 collected or broadcast through the driver, and no plan ever scans or
 shuffles the full seen table; Bloom false positives cost a slice lookup,
-never a dropped URL.
+never a dropped URL. This is the one seen-set path. The only variation is
+Iceberg's: its catalog reports no bucket layout for `seen`, so there the
+bloom-positive rows are confirmed by an anti-join instead of a slice.
 
 Per-round counters (fetched, links, new, blocked) ride on
 ``DataFrame.observe`` attached to writes the round performs anyway — the
@@ -58,7 +62,6 @@ from __future__ import annotations
 import json
 import os
 import tempfile
-import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -84,7 +87,6 @@ from .seen import (
     load_bucket_seen_hashes,
     make_bucket_state_builder,
     seenhash_contains,
-    merge_state,
 )
 
 FETCH_SCHEMA = (
@@ -114,7 +116,7 @@ PROBE_SCHEMA = (
 )
 
 # tables this engine produces; _reconcile_to_state only ever drops these —
-# anything else in the workdir (legacy-format tables, user extras) survives
+# anything else in the workdir (user extras) survives
 ENGINE_TABLES = (
     "frontier", "seen", "blocked", "pages", "seen_state", "lineage", "metrics", "failed"
 )
@@ -123,22 +125,9 @@ N_SALTS = 8
 SALT_PREPASS_MAX_CAP = 10_000  # politeness caps are small; beyond this the cap
 # cannot meaningfully bind and the pre-pass shuffle is pure overhead
 
-_TIMING = os.environ.get("SPARK_GRAFT_TIMING", "") == "1"
-
-
-class _StageTimer:
-    """Wall-clock attribution between action boundaries (env-gated; the
-    per-round metrics table is the production path, this is the dev loop)."""
-
-    def __init__(self, tag: str):
-        self.tag = tag
-        self.t = time.monotonic()
-
-    def mark(self, stage: str) -> None:
-        now = time.monotonic()
-        if _TIMING:
-            print(f"[timing] {self.tag} {stage}: {now - self.t:.2f}s", flush=True)
-        self.t = now
+# On-disk checkpoint format, stamped into every _state.json. A workdir of
+# any other format is refused rather than migrated (see load_state).
+STATE_FORMAT = 1
 
 
 def _fetch_factory(cfg: CrawlConfig, rnd: int):
@@ -214,8 +203,9 @@ def _make_probe(state_dirs: list[str], seen_dirs: list[str] | None = None):
     table's parquet, cached per python worker (seen.py module cache,
     content-keyed).
 
-    With ``seen_dirs`` (the bucket-partitioned `seen` table's data dirs)
-    the EXACT confirmation also happens here: Bloom-positive rows are
+    With ``seen_dirs`` (the bucket-partitioned `seen` table's data dirs;
+    None on Iceberg, where the caller confirms by anti-join instead) the
+    EXACT confirmation also happens here: Bloom-positive rows are
     checked against their bucket's 128-bit-hash slice
     (seen.load_bucket_seen_hashes — 16 bytes/URL flat numpy, binary-search
     probe) in the same task — no plan downstream ever joins, scans, or
@@ -271,20 +261,14 @@ class RoundStats:
 
 class CrawlEngine:
     def __init__(self, spark: SparkSession, cfg: CrawlConfig, workdir: str,
-                 use_bloom: bool = True, bloom_fpp: float = 0.01,
-                 expected_urls: int = 200_000, bloom_mode: str = "partitioned",
+                 bloom_fpp: float = 0.01, expected_urls: int = 200_000,
                  n_buckets: int = 64):
-        assert bloom_mode in ("partitioned", "broadcast")
         self.spark = spark
         self.cfg = cfg
         self.catalog = open_catalog(workdir, spark)  # Iceberg when the runtime is present
         self.workdir = workdir
-        self.use_bloom = use_bloom
-        self.bloom_mode = bloom_mode
         self.n_buckets = n_buckets
-        per_bucket = max(64, expected_urls // n_buckets) if bloom_mode == "partitioned" \
-            else expected_urls
-        sizing = Bloom.sized_for(per_bucket, bloom_fpp)
+        sizing = Bloom.sized_for(max(64, expected_urls // n_buckets), bloom_fpp)
         self.bloom_bits, self.bloom_hashes = sizing.n_bits, sizing.n_hashes
 
     # ---------------------------------------------------------------- state
@@ -294,15 +278,27 @@ class CrawlEngine:
     def _commit_state(self, state: dict) -> None:
         fd, tmp = tempfile.mkstemp(dir=self.workdir)
         with os.fdopen(fd, "w") as f:
-            json.dump(state, f)
+            json.dump(dict(state, format=STATE_FORMAT), f)
         os.replace(tmp, self._state_path())
 
     def load_state(self) -> dict | None:
+        """The committed state, or None for a workdir with no crawl.
+
+        Raises ValueError for a state of another checkpoint format (or an
+        unstamped one): the engine holds no migration code, so such a
+        workdir can only be crawled afresh."""
         p = self._state_path()
         if not os.path.exists(p):
             return None
         with open(p) as f:
-            return json.load(f)
+            state = json.load(f)
+        if state.get("format") != STATE_FORMAT:
+            raise ValueError(
+                f"{p} has checkpoint format {state.get('format')!r}; this engine "
+                f"resumes only format {STATE_FORMAT}. Start the crawl over with "
+                f"run(resume=False)."
+            )
+        return state
 
     def _read(self, name: str, state: dict) -> DataFrame:
         return self.catalog.read(name, self.spark, snapshot=state["snapshots"].get(name))
@@ -393,28 +389,7 @@ class CrawlEngine:
         # the dedup aggregate's stage with no shuffle of its own
         return F.pmod(F.hash("url_canon"), F.lit(self.n_buckets)).cast("int")
 
-    def _load_bloom_broadcast(self, state: dict | None) -> list[Bloom] | None:
-        """Legacy/small-scale loader: OR every state row into one driver-side
-        filter PER BLOOM GEOMETRY (right up to ~10^8 seen URLs; the
-        partitioned probe is the 10^10 path) — a workdir resumed with a
-        different expected_urls/fpp, or a partitioned layout re-opened in
-        broadcast mode, holds mixed shapes that must not cross-merge.
-        Reads the tiny state rows with pyarrow — no Spark job."""
-        if state is None or "seen_state" not in state["snapshots"]:
-            return None
-        import pyarrow.parquet as pq
-
-        rows: list[dict] = []
-        for d in self.catalog.member_dirs("seen_state", state["snapshots"]["seen_state"]):
-            for root, _dirs, files in os.walk(d):
-                for fn in files:
-                    if fn.endswith(".parquet"):
-                        t = pq.read_table(os.path.join(root, fn), columns=["bloom_bytes"])
-                        rows.extend({"bloom_bytes": v.as_py()} for v in t.column("bloom_bytes"))
-        return merge_state(rows) or None
-
-    def _dedup_filter_unseen(self, candidates: DataFrame, seen: DataFrame | None,
-                             state: dict) -> DataFrame:
+    def _dedup_filter_unseen(self, candidates: DataFrame, state: dict) -> DataFrame:
         """First-discovery dedup of raw link candidates + exact-unseen subset.
 
         The dedup is a min-struct aggregate keyed on url_canon — Spark's
@@ -424,19 +399,20 @@ class CrawlEngine:
         struct, so min() picks the first-discovery row deterministically
         (ts values are globally unique by construction).
 
-        ``partitioned`` mode (the 10^10 path) runs the Bloom probe AND the
-        exact confirmation as a mapInPandas in the aggregate's own stage
-        (bucket expr is shuffle-aligned, see _bucket_col): bloom-negative
-        rows are definitely new; bloom-positive rows are checked against
-        their bucket's exact seen slice loaded executor-side
-        (seen.load_bucket_seen_hashes) — so the realized physical plan NEVER
-        scans, joins, or shuffles the full seen table (the round-2 judge's
-        O(seen)-shuffle-per-round finding; asserted by
+        The Bloom probe AND the exact confirmation run as a mapInPandas in
+        the aggregate's own stage (bucket expr is shuffle-aligned, see
+        _bucket_col): bloom-negative rows are definitely new; bloom-positive
+        rows are checked against their bucket's exact seen slice loaded
+        executor-side (seen.load_bucket_seen_hashes) — so the realized
+        physical plan NEVER scans, joins, or shuffles the full seen table
+        (the round-2 judge's O(seen)-shuffle-per-round finding; asserted by
         tests/test_seen_bloom.py::test_round_plan_never_scans_seen).
-        ``broadcast`` keeps the merged-filter pandas UDF + exact anti-join
-        for small deployments; legacy flat-layout seen tables fall back to
-        the anti-join confirmer too. Only those anti-join paths use
-        ``seen``; ``None`` reads it from ``state`` when one of them runs
+
+        On Iceberg the catalog reports no partition layout for ``seen``
+        (the table spec governs, see IcebergTableCatalog.partition_layout),
+        so there are no bucket slices to confirm against: the probe only
+        answers "maybe", and the bloom-positive rows are confirmed by an
+        anti-join against ``seen``, read from ``state`` on that path only
         (the read alone costs a listing job over every bucket dir)."""
         deduped = (
             candidates.groupBy("url_canon")
@@ -453,67 +429,33 @@ class CrawlEngine:
                 F.col("__first.depth").alias("depth"),
             )
         )
-        if self.use_bloom and self.bloom_mode == "partitioned":
-            state_dirs = (
-                self.catalog.member_dirs("seen_state", state["snapshots"]["seen_state"])
-                if "seen_state" in state["snapshots"] else []
-            )
-            seen_bucketed = self.catalog.partition_layout("seen") == "bucket"
-            seen_dirs = (
-                self.catalog.member_dirs("seen", state["snapshots"]["seen"])
-                if seen_bucketed and "seen" in state["snapshots"] else None
-            )
-            probed = (
-                deduped.withColumn("bucket", self._bucket_col())
-                .mapInPandas(_make_probe(state_dirs, seen_dirs), PROBE_SCHEMA)
-                .localCheckpoint(eager=False)
-            )
-            if seen_dirs is not None:
-                # exact confirmation already happened inside the probe
-                # against the aligned bucket slices — no seen scan/join in
-                # this plan at all
-                return probed.filter(~F.col("seen")).select(*FRONTIER_COLS)
-            seen = self._read("seen", state) if seen is None else seen
-            definite_new = probed.filter(~F.col("maybe_seen")).select(*FRONTIER_COLS)
-            confirmed_new = (
-                probed.filter(F.col("maybe_seen"))
-                .select(*FRONTIER_COLS)
-                .join(seen, "url_canon", "left_anti")
-            )
-            return definite_new.unionByName(confirmed_new)
-        seen = self._read("seen", state) if seen is None else seen
-        blooms = self._load_bloom_broadcast(state) if self.use_bloom else None
-        if not blooms:
-            return deduped.join(seen, "url_canon", "left_anti")
-        bloom_bytes = [b.to_bytes() for b in blooms]
-        # content-stable cache token: the state epoch pins exactly which
-        # blooms were merged (never id() — reused addresses would alias)
-        cache_token = f"{self.workdir}:r{state['round_completed']}"
-
-        @F.pandas_udf("boolean")
-        def might_contain(urls: pd.Series) -> pd.Series:
-            # deserialize once per python worker, not per Arrow batch — at
-            # large rounds the filter is tens of MB and the per-batch
-            # decompress would dominate the whole stage
-            global _BLOOM_CACHE
-            try:
-                cached_key, b = _BLOOM_CACHE
-            except NameError:
-                cached_key, b = None, None
-            if cached_key != cache_token or b is None:
-                b = [Bloom.from_bytes(bb) for bb in bloom_bytes]
-                _BLOOM_CACHE = (cache_token, b)
-            return pd.Series(contains_any(b, urls))
-
-        flagged = deduped.withColumn("__maybe", might_contain("url_canon"))
-        flagged = flagged.localCheckpoint(eager=False)
-        definite_new = flagged.filter(~F.col("__maybe")).drop("__maybe")
+        state_dirs = (
+            self.catalog.member_dirs("seen_state", state["snapshots"]["seen_state"])
+            if "seen_state" in state["snapshots"] else []
+        )
+        seen_dirs = (
+            self.catalog.member_dirs("seen", state["snapshots"]["seen"])
+            if self.catalog.partition_layout("seen") == "bucket" else None
+        )
+        probed = (
+            deduped.withColumn("bucket", self._bucket_col())
+            .mapInPandas(_make_probe(state_dirs, seen_dirs), PROBE_SCHEMA)
+            .localCheckpoint(eager=False)
+        )
+        if seen_dirs is not None:
+            # exact confirmation already happened inside the probe
+            # against the aligned bucket slices — no seen scan/join in
+            # this plan at all
+            return probed.filter(~F.col("seen")).select(*FRONTIER_COLS)
+        definite_new = probed.filter(~F.col("maybe_seen")).select(*FRONTIER_COLS)
         confirmed_new = (
-            flagged.filter(F.col("__maybe")).drop("__maybe").join(seen, "url_canon", "left_anti")
+            probed.filter(F.col("maybe_seen"))
+            .select(*FRONTIER_COLS)
+            .join(self._read("seen", state), "url_canon", "left_anti")
         )
         return definite_new.unionByName(confirmed_new)
 
-    def _idn_fix(self, new_urls: DataFrame, seen: DataFrame | None, state: dict) -> DataFrame:
+    def _idn_fix(self, new_urls: DataFrame, state: dict) -> DataFrame:
         """IDN (punycode) key normalization — the observation-gated rare path.
 
         Runs only in rounds where the free ``observe`` counter saw non-ASCII
@@ -533,37 +475,20 @@ class CrawlEngine:
         ascii_rows = new_urls.filter(ascii_ok)
         untouched = ascii_rows.join(fixed_keys, "url_canon", "left_anti")
         colliding = ascii_rows.join(fixed_keys, "url_canon", "left_semi")
-        redone = self._dedup_filter_unseen(colliding.unionByName(fixed), seen, state)
+        redone = self._dedup_filter_unseen(colliding.unionByName(fixed), state)
         return untouched.unionByName(redone.select(*untouched.columns))
 
     def _append_seen_state(self, new_urls: DataFrame, epoch: int) -> None:
-        if not self.use_bloom:
-            return
-        nb, nh = self.bloom_bits, self.bloom_hashes
-        if self.bloom_mode == "partitioned":
-            rows = (
-                new_urls.select("url_canon")
-                .withColumn("bucket", self._bucket_col())
-                .groupBy("bucket")
-                .applyInPandas(
-                    make_bucket_state_builder(epoch, nb, nh),
-                    "bucket int, epoch int, bloom_bytes binary, n_items long",
-                )
-            )
-            self._upsert("seen_state", rows, partition_by="bucket")
-            return
-        from .seen import build_state_rows
-
         rows = (
             new_urls.select("url_canon")
-            .repartition(max(2, new_urls.sparkSession.sparkContext.defaultParallelism // 4))
-            .withColumn("__pid", F.spark_partition_id())
-            .mapInPandas(
-                lambda it: build_state_rows(it, epoch, nb, nh),
-                "partition_id int, epoch int, bloom_bytes binary, n_items long",
+            .withColumn("bucket", self._bucket_col())
+            .groupBy("bucket")
+            .applyInPandas(
+                make_bucket_state_builder(epoch, self.bloom_bits, self.bloom_hashes),
+                "bucket int, epoch int, bloom_bytes binary, n_items long",
             )
         )
-        self._upsert("seen_state", rows)
+        self._upsert("seen_state", rows, partition_by="bucket")
 
     # Fold per-epoch seen_state rows after this many appended epochs: one
     # row per (bucket, geometry) afterwards. Bounds the probe's per-bucket
@@ -582,20 +507,18 @@ class CrawlEngine:
         no-op for the probe — it ORs the rows on read anyway — but turns
         O(rounds) state rows/files per bucket into O(1).
 
-        Only the pure bucketed layout compacts. A workdir that ever ran in
-        ``broadcast`` mode holds flat state snapshots (partition_id rows,
-        files directly under ``snap=k/``); a bucket-keyed rewrite would
-        either crash on the missing column or silently drop those blooms —
-        and a lost bloom row makes the probe return definitely-unseen for
-        seen URLs. Such mixed tables are detected by listing the member
-        dirs for flat parquet files and left exactly as written (returns
-        False; the probe keeps OR-ing per-epoch rows, which is always
-        correct, just less compact)."""
+        Only the parquet catalog's layout folds, where data files sit in
+        ``__pdir=<bucket>/`` dirs below each member dir. On Iceberg,
+        ``member_dirs`` returns the data files' own parents
+        (``…/bucket=N``), so parquet files sit directly in a member dir;
+        the fold has never run against an Iceberg table, so such a table
+        is left exactly as written (returns False; the probe keeps OR-ing
+        per-epoch rows, which is always correct, just less compact)."""
         from .seen import _parquet_files
 
         dirs = self.catalog.member_dirs("seen_state")
         if any(_parquet_files(d) for d in dirs):
-            return False  # legacy flat snapshot present — do not fold
+            return False  # Iceberg data-file dirs — do not fold
         df = self.catalog.read("seen_state", self.spark)
         folded = df.groupBy("bucket").applyInPandas(
             fold_bucket_state,
@@ -607,7 +530,6 @@ class CrawlEngine:
     # ---------------------------------------------------------------- init
     def init_crawl(self) -> None:
         """Round -1: canonicalize + dedup + robots-split the seed list."""
-        tm = _StageTimer("init")
         web_cfg = self.cfg.web
 
         def gen_seeds(batches):
@@ -679,7 +601,6 @@ class CrawlEngine:
             .select(*FRONTIER_COLS)
         ).localCheckpoint(eager=False)  # canonicalize+dedup+robots once, not per write
 
-        tm.mark("seed_gen")
         obs_seen = Observation("init_seen")
         obs_blocked = Observation("init_blocked")
         self.catalog.create_or_replace(
@@ -703,9 +624,7 @@ class CrawlEngine:
             .observe(obs_blocked, F.count(F.lit(1)).alias("n"))
             .select("url_canon"),
         )
-        tm.mark("seed_writes")
         self._append_seen_state(seeds.select("url_canon"), epoch=-1)
-        tm.mark("seed_state")
         n_seen = obs_seen.get["n"]
         n_blocked = obs_blocked.get["n"]
         state = {
@@ -729,7 +648,6 @@ class CrawlEngine:
     # ---------------------------------------------------------------- round
     def run_round(self, state: dict) -> tuple[dict, RoundStats] | None:
         rnd = state["round_completed"] + 1
-        tm = _StageTimer(f"round{rnd}")
         # A failed round leaves orphan appends past the committed snapshots
         # (the frontier delete file is scheduled eagerly, mid-round). run()
         # reconciles on resume, but a caller retrying run_round(state)
@@ -742,34 +660,10 @@ class CrawlEngine:
             for t, snap in state["snapshots"].items()
         ):
             self._reconcile_to_state(state)
-        frontier = self._read("frontier", state)
-        # one-time schema migration for workdirs checkpointed before retry
-        # support: fold the legacy url-keyed delete files (compact clears
-        # the table's delete key) and add the attempts/fkey columns, so this
-        # round's fkey-keyed delete chain can proceed. O(frontier) once; a
-        # crash before the round's state commit resumes at the legacy pin
-        # and simply re-migrates.
-        if "attempts" not in frontier.columns:
-            self.catalog.create_or_replace(
-                "frontier",
-                frontier.withColumn("attempts", F.lit(0)).withColumn("fkey", _fkey_col()),
-            )
-            state = dict(
-                state,
-                snapshots=dict(
-                    state["snapshots"],
-                    frontier=self.catalog.snapshots("frontier")[-1]["id"],
-                ),
-            )
-            frontier = self._read("frontier", state)
-        # counter bookkeeping replaces an isEmpty() probe job; states written
-        # by older checkpoints fall back to the probe
-        if state.get("frontier_count", None) is not None:
-            if state["frontier_count"] == 0:
-                return None
-        elif frontier.isEmpty():
+        # counter bookkeeping replaces an isEmpty() probe job
+        if state["frontier_count"] == 0:
             return None
-        tm.mark("frontier_empty_check")
+        frontier = self._read("frontier", state)
         cap = self.cfg.per_host_cap
 
         # -- schedule: salted partial top-k defuses hot-host window skew,
@@ -813,7 +707,6 @@ class CrawlEngine:
         # round's two big stages put ~1-2 s of fixed job time on the critical
         # path at every parallelism — pure serial-floor at 4N cores).
         sched = sched.localCheckpoint(eager=True)
-        tm.mark("schedule_only")
         side_pool = ThreadPoolExecutor(max_workers=2)
         fut_frontier_delete = side_pool.submit(
             self.catalog.append_deletes,
@@ -877,7 +770,6 @@ class CrawlEngine:
         n_retried = int(pm["n_retried"] or 0)
         n_failed = int(pm["n_failed"] or 0)
         results = self.catalog.read_snapshot_dir("pages", self.spark, pages_snap)
-        tm.mark("schedule+fetch+write_pages")
 
         # per-partition lineage (north rule: partition_id, bloom epoch, last
         # url hash, rows fetched) depends ONLY on the pages snapshot — run
@@ -952,7 +844,7 @@ class CrawlEngine:
         )
 
         # -- first-discovery dedup + seen-set check (bucketed Bloom probe +
-        #    exact anti-join confirmer), one materialization for all sinks.
+        #    exact bucket-slice confirmer), one materialization for all sinks.
         # The robots flag rides the same materialization, so the frontier
         # and blocked sinks filter on it instead of each re-running the join;
         # only the IDN rewrite (new url_canon and host) computes it again.
@@ -960,7 +852,7 @@ class CrawlEngine:
         # all-ASCII web (the common case) pays zero extra jobs for step 9.
         obs_idn = Observation(f"r{rnd}_idn")
         new_urls = (
-            self._with_blocked(self._dedup_filter_unseen(children, None, state))
+            self._with_blocked(self._dedup_filter_unseen(children, state))
             .observe(
                 obs_idn,
                 F.sum((~is_ascii_col("url_canon")).cast("long")).alias("n_idn"),
@@ -969,9 +861,8 @@ class CrawlEngine:
         )
         if int(obs_idn.get["n_idn"] or 0):
             new_urls = self._with_blocked(
-                self._idn_fix(new_urls.select(*FRONTIER_COLS), None, state)
+                self._idn_fix(new_urls.select(*FRONTIER_COLS), state)
             ).localCheckpoint(eager=True)
-        tm.mark("extract+dedup+unseen")
 
         # -- commit next state through the catalog (order-safe: _state.json
         #    last, so a crash mid-commit resumes from the previous round).
@@ -997,18 +888,14 @@ class CrawlEngine:
         # — no plan ever shuffles the 10^10-row seen side). On Iceberg the
         # same layout is the bucket transform, which additionally enables
         # storage-partitioned joins (SPARK-37375) for ad hoc readers.
-        # Workdirs from the flat-layout format keep appending flat.
         def _commit_seen():
-            seen_out = new_urls.observe(
-                obs_seen, F.count(F.lit(1)).alias("n")
-            ).select("url_canon")
-            if self.catalog.partition_layout("seen") == "bucket":
-                self.catalog.append(
-                    "seen", seen_out.withColumn("bucket", self._bucket_col()),
-                    partition_by="bucket",
-                )
-            else:
-                self.catalog.append("seen", seen_out)
+            self.catalog.append(
+                "seen",
+                new_urls.observe(obs_seen, F.count(F.lit(1)).alias("n"))
+                .select("url_canon")
+                .withColumn("bucket", self._bucket_col()),
+                partition_by="bucket",
+            )
 
         def _commit_blocked():
             self.catalog.append(
@@ -1053,46 +940,31 @@ class CrawlEngine:
                 fu.result()
         n_new = int(obs_seen.get["n"])
         n_blocked_new = int(obs_blocked.get["n"])
-        tm.mark("write_state_delta(parallel: seen+blocked+frontier+seen_state)")
 
         # seen_state compaction policy (amortized, like the frontier's):
         # each round appends <=1 row per touched bucket; after
         # SEEN_COMPACT_EPOCHS appends, fold them to one row per bucket.
-        # Legacy checkpoints without the counter start it at completed
-        # rounds + the init append (every completed round and the init each
-        # appended one epoch); after a successful fold zero un-folded
-        # epochs remain, so the counter resets to 0.
-        seen_epochs = state.get("seen_epochs", state["round_completed"] + 2) + 1
-        if (
-            self.use_bloom
-            and self.bloom_mode == "partitioned"
-            and seen_epochs >= self.SEEN_COMPACT_EPOCHS
-        ):
-            if self.compact_seen_state():
-                seen_epochs = 0
-                tm.mark("compact_seen_state")
+        # After a successful fold zero un-folded epochs remain, so the
+        # counter resets to 0.
+        seen_epochs = state["seen_epochs"] + 1
+        if seen_epochs >= self.SEEN_COMPACT_EPOCHS and self.compact_seen_state():
+            seen_epochs = 0
 
-        # derived from the running counters (scheduled URLs leave the
-        # frontier, allowed-new enter; every new URL enters seen) — replaces
-        # two full-table count jobs per round
-        prev_frontier = state.get("frontier_count")
-        prev_seen = state.get("seen_count")
-        if prev_frontier is None or prev_seen is None:  # legacy checkpoint
-            frontier_after = self.catalog.read("frontier", self.spark).count()
-            seen_after = self.catalog.read("seen", self.spark).count()
-        else:
-            # scheduled rows leave, allowed discoveries and backoff
-            # re-inserts enter; every new URL (allowed or blocked) enters seen
-            frontier_after = prev_frontier - n_fetched + (n_new - n_blocked_new) + n_retried
-            seen_after = prev_seen + n_new
+        # derived from the running counters — replaces two full-table count
+        # jobs per round: scheduled rows leave the frontier, allowed
+        # discoveries and backoff re-inserts enter; every new URL (allowed
+        # or blocked) enters seen
+        frontier_after = (
+            state["frontier_count"] - n_fetched + (n_new - n_blocked_new) + n_retried
+        )
+        seen_after = state["seen_count"] + n_new
 
         # compaction policy: fold delete files into the data when they
         # exceed ~2x the live frontier (Iceberg maintenance, amortized)
-        frontier_deletes = state.get("frontier_deletes", 0) + n_fetched
+        frontier_deletes = state["frontier_deletes"] + n_fetched
         if frontier_deletes > max(2 * frontier_after, self.FRONTIER_COMPACT_MIN):
             self.catalog.compact("frontier", self.spark)
             frontier_deletes = 0
-            tm.mark("compact_frontier")
 
         # lineage rows were aggregated concurrently with extract+dedup above
         lin = fut_lineage.result()
@@ -1122,7 +994,6 @@ class CrawlEngine:
             ],
             lineage_schema,
         )
-        tm.mark("write_lineage")
 
         stats = RoundStats(
             rnd, n_fetched, links_extracted, n_new, frontier_after, seen_after,
@@ -1161,8 +1032,7 @@ class CrawlEngine:
         """Roll every engine table back to the snapshot the committed state
         references, dropping data written by a crashed round (the state file
         is the commit point; anything past it never happened). Tables this
-        engine does not produce — legacy-format tables, user extras — are
-        left untouched."""
+        engine does not produce (user extras) are left untouched."""
         referenced = state["snapshots"]
         for name in self.catalog.tables():
             if name in referenced:
@@ -1171,6 +1041,27 @@ class CrawlEngine:
                 self.catalog.drop(name)
 
     # ---------------------------------------------------------------- run
+    def _start(self, resume: bool | None) -> dict:
+        """The committed state the next round runs on.
+
+        Unless ``resume`` is False, a workdir's committed state is rolled
+        back to (orphans of a crashed round dropped) and returned. Otherwise,
+        or when there is no state, every engine table and the state file are
+        dropped first — a stale ``pages`` table would otherwise duplicate
+        fetch-log rows — and the crawl is initialized fresh."""
+        state = self.load_state() if resume is not False else None
+        if state is not None:
+            self._reconcile_to_state(state)
+            return state
+        for name in ENGINE_TABLES:
+            if self.catalog.exists(name):
+                self.catalog.drop(name)
+        p = self._state_path()
+        if os.path.exists(p):
+            os.remove(p)
+        self.init_crawl()
+        return self.load_state()
+
     def run(self, resume: bool | None = None) -> list[RoundStats]:
         """Run rounds until ``max_rounds`` or the frontier drains.
 
@@ -1181,24 +1072,11 @@ class CrawlEngine:
         ``resume=True``: same, but explicit (kept for callers that want to
         assert continuation). ``resume=False``: force a fresh crawl — any
         engine-produced tables and state in the workdir are dropped first,
-        never appended to (a stale ``pages`` table would otherwise
-        duplicate fetch-log rows). Legacy-format projection tables
-        (``fetch_log``, ``images``) are dropped too: they are unioned into
-        the read projections, so surviving a forced reset would resurface
-        pre-reset history as duplicates.
+        never appended to. A workdir checkpointed in another format
+        (``STATE_FORMAT``) makes a resuming run raise ValueError; only
+        ``resume=False`` starts one over.
         """
-        state = self.load_state() if resume is not False else None
-        if state is None:
-            for name in ENGINE_TABLES + ("fetch_log", "images"):
-                if self.catalog.exists(name):
-                    self.catalog.drop(name)
-            p = self._state_path()
-            if os.path.exists(p):
-                os.remove(p)
-            self.init_crawl()
-            state = self.load_state()
-        else:
-            self._reconcile_to_state(state)
+        state = self._start(resume)
         all_stats: list[RoundStats] = []
         while state["round_completed"] + 1 < self.cfg.max_rounds:
             out = self.run_round(state)
@@ -1212,8 +1090,6 @@ class CrawlEngine:
     # fetch_log and images are PROJECTIONS of the single `pages` landing
     # table — parquet column pruning makes each read touch only its columns
     # (the bytes column is written once at fetch time, never re-serialized).
-    # Workdirs written by the pre-`pages` format kept standalone fetch_log /
-    # images tables; if present they are unioned in so history survives.
     # A crawl that never fetched (n_seeds=0, or everything robots-blocked)
     # has no `pages` table: the projections are then empty, not an error.
     def _pages_or_empty(self) -> DataFrame:
@@ -1222,13 +1098,9 @@ class CrawlEngine:
         return self.spark.createDataFrame([], FETCH_SCHEMA)
 
     def fetch_log(self) -> DataFrame:
-        df = self._pages_or_empty().select("seq", "url_canon", "host", "round")
-        if self.catalog.exists("fetch_log"):
-            legacy = self.catalog.read("fetch_log", self.spark).select(
-                "seq", "url_canon", "host", "round"
-            )
-            df = legacy.unionByName(df)
-        return df.orderBy("seq")
+        return (
+            self._pages_or_empty().select("seq", "url_canon", "host", "round").orderBy("seq")
+        )
 
     def seen_set(self) -> DataFrame:
         if self.catalog.exists("seen"):
@@ -1239,10 +1111,7 @@ class CrawlEngine:
         cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash", "url_canon", "seq"]
         # only 200-status fetches carry a payload (redirects/failures land
         # in pages for the fetch log, with null image columns)
-        df = self._pages_or_empty().filter(F.col("status") == 200).select(*cols)
-        if self.catalog.exists("images"):
-            df = self.catalog.read("images", self.spark).select(*cols).unionByName(df)
-        return df
+        return self._pages_or_empty().filter(F.col("status") == 200).select(*cols)
 
     def failed_set(self) -> DataFrame:
         """Dead-letter table: URLs that exhausted their retry budget (503 x

@@ -5,9 +5,12 @@ against the full seen table — the Bloom prunes the shuffle. Semantics are
 kept EXACT (the fixtures demand the exact set, SURVEY.md §7 "What's hard"):
 
   - might_contain == False  ->  definitely unseen: pass through, no shuffle.
-  - might_contain == True   ->  maybe seen: exact anti-join against the seen
-                                table confirms (Bloom false positives would
-                                otherwise DROP real URLs).
+  - might_contain == True   ->  maybe seen: the bucket's exact seen slice
+                                confirms (``load_bucket_seen_hashes``; Bloom
+                                false positives would otherwise DROP real
+                                URLs). On Iceberg, which has no bucket dirs
+                                to slice, an anti-join against ``seen``
+                                confirms instead (engine._dedup_filter_unseen).
 
 State layout (FIXTURES.md `seen_state`): the seen set is hash-partitioned
 into ``bucket = pmod(hash(url_canon), n_buckets)`` slices (Murmur3 — the
@@ -21,7 +24,9 @@ candidates are grouped by the same bucket expression and each task loads
 ONLY its bucket's bloom rows straight from the state table's parquet
 (``load_bucket_blooms``), cached per python worker process. At 10^10 seen
 URLs / 1% fpp the full filter is ~12 GB — per-bucket slices keep any one
-task's working set at filter_size/n_buckets.
+task's working set at filter_size/n_buckets. Per-epoch rows plus the
+periodic fold (``fold_bucket_state``) make this one sliding-window
+structure; no whole-filter merged copy is kept beside it.
 
 The filter itself is pure numpy (no JVM dependency): double hashing
 h_i = (h1 + i*h2) mod m over two independent 60-bit md5-derived hashes
@@ -88,24 +93,6 @@ class Bloom:
         return Bloom(self.n_bits, self.n_hashes, np.bitwise_or(self.bits, other.bits))
 
 
-def build_state_rows(urls_pdf_iter, epoch: int, n_bits: int, n_hashes: int):
-    """applyInPandas-shaped builder: one partition of new-seen URLs ->
-    one (partition_id, epoch, bloom_bytes, n_items) state row. Legacy
-    (unbucketed, broadcast-merged) layout — kept for migration reads."""
-    for pdf in urls_pdf_iter:
-        b = Bloom(n_bits, n_hashes)
-        b.add(pdf["url_canon"])
-        pid = int(pdf["__pid"].iloc[0]) if len(pdf) else -1
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "epoch": [epoch],
-                "bloom_bytes": [b.to_bytes()],
-                "n_items": [len(pdf)],
-            }
-        )
-
-
 def make_bucket_state_builder(epoch: int, n_bits: int, n_hashes: int):
     """groupBy(bucket).applyInPandas builder: one bucket's new-seen URLs ->
     one (bucket, epoch, bloom_bytes, n_items) state row. Every URL of a
@@ -161,21 +148,6 @@ def fold_bucket_state(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def merge_state(rows: list[dict]) -> list[Bloom]:
-    """OR all persisted per-partition blooms into one queryable filter PER
-    GEOMETRY. A workdir can legitimately hold rows of several (n_bits,
-    n_hashes) shapes — resumed with a different expected_urls/fpp, or a
-    partitioned layout re-opened in broadcast mode — and merging across
-    shapes is undefined, so shapes merge independently (the same by-shape
-    fold load_bucket_blooms uses). Probe the result with contains_any."""
-    by_shape: dict[tuple[int, int], Bloom] = {}
-    for r in rows:
-        b = Bloom.from_bytes(r["bloom_bytes"])
-        shape = (b.n_bits, b.n_hashes)
-        by_shape[shape] = b if shape not in by_shape else by_shape[shape].merge(b)
-    return list(by_shape.values())
-
-
 # ---------------------------------------------------------------------------
 # Executor-side sliced loading. Module-level cache: python workers are
 # reused across tasks (spark.python.worker.reuse), and module state — unlike
@@ -209,10 +181,11 @@ _MERGED_CACHE: dict = {}
 
 def load_bucket_blooms(member_dirs: list[str], bucket: int) -> list[Bloom]:
     """Load the bloom rows for ONE bucket slice from the seen_state table's
-    data dirs (``snap=k/__pdir=<bucket>/``). Legacy unbucketed snapshots
-    (flat files under ``snap=k/``) cover all buckets, so their blooms are
-    included for every bucket — a superset 'maybe', confirmed exact by the
-    anti-join as always.
+    data dirs (``snap=k/__pdir=<bucket>/``). On Iceberg the member dirs
+    are the data files' own parents (``…/bucket=N``), with no
+    ``__pdir=`` level below them: their files are read for every bucket —
+    a superset 'maybe'. Iceberg confirms every bloom-positive row by an
+    anti-join, so the result stays exact.
 
     Same-shaped blooms (one per epoch) are pre-OR-merged and the merge is
     cached per worker, so a probe computes each URL's hash positions once
@@ -221,7 +194,7 @@ def load_bucket_blooms(member_dirs: list[str], bucket: int) -> list[Bloom]:
     files: list[str] = []
     for d in member_dirs:
         files.extend(_parquet_files(os.path.join(d, f"__pdir={bucket}")))
-        files.extend(_parquet_files(d))  # legacy flat layout
+        files.extend(_parquet_files(d))  # Iceberg data-file dirs
     # keyed by bucket with the file-set token as the VALUE guard: each
     # round's append makes a new token, and storing (token, value) under
     # the bare bucket key evicts the superseded round's merged slice

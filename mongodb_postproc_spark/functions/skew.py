@@ -1,64 +1,15 @@
-"""Explicit salting for hot-key joins (the north rule's named remedy for
-hot-host skew, alongside repartitionByRange — BASELINE.json north_star).
+"""Skew-tolerant window plans.
 
-AQE's skew-join splitting handles most skew at runtime; explicit salting is
-the plan-level guarantee for the pathological case AQE can't fix: ONE key
-carrying a constant fraction of a 10^10-row fact table, where even a split
-shuffle block leaves every subtask of that key on the same join row of the
-other side. Salting rewrites the join itself:
-
-- the FACT side gets a deterministic salt in [0, S) hashed from a
-  row-unique column (md5-backed xxhash64 — no RNG, reproducible), so the
-  hot key's rows spread over S shuffle partitions;
-- the DIM side is replicated S times (explode over a literal salt array);
-- the join key becomes (key, salt), and every fact row matches exactly the
-  one replica carrying its salt — the result is row-for-row identical to
-  the unsalted join, asserted in tests/test_skew_salting.py.
-
-Cost model: dim-side replication is S× a (small) dimension, fact side is
-untouched — the trade every skew playbook makes. Composes with bucketing
-only on the fact side (the salt changes the dim layout), so it is the
-remedy of LAST resort after broadcast (small dim) and AQE (moderate skew).
+A window's PARTITION BY serializes each group into one task, so one key
+carrying a constant fraction of the input runs on one core however wide
+the cluster. The helpers here rewrite such windows into plans that spread
+the hot group over many tasks with byte-identical results.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DEFAULT_SALTS = 8
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    row_unique: str,
-    n_salts: int = DEFAULT_SALTS,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join `fact` ⋈ `dim` on `key`, salted to `n_salts` partitions per
-    key. `row_unique` is any fact column (or expression) whose per-row hash
-    spreads rows; the salt is pmod(xxhash64(row_unique), n_salts) —
-    deterministic, no RNG. Output columns = fact.* + dim.* minus the
-    duplicate key (same contract as df.join(dim, key, how)).
-
-    Only fact-preserving joins are supported: the dim side is replicated
-    n_salts times, so a join type that emits unmatched DIM rows
-    (right/full outer) would emit each of them n_salts times. Those raise.
-    """
-    if how not in ("inner", "left", "left_outer", "left_semi", "left_anti"):
-        raise ValueError(
-            f"salted_join supports fact-preserving joins only "
-            f"(inner/left/left_semi/left_anti), not {how!r}: the replicated "
-            f"dim side would duplicate unmatched dim rows {n_salts}x"
-        )
-    f = fact.withColumn("__salt", F.pmod(F.xxhash64(F.expr(row_unique)), F.lit(n_salts)))
-    d = dim.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i).cast("long") for i in range(n_salts)]))
-    )
-    out = f.join(d, on=[key, "__salt"], how=how)
-    return out.drop("__salt")
 
 
 def skewed_running_sum(

@@ -184,7 +184,8 @@ class TableCatalog:
 
     def partition_layout(self, name: str) -> str | None:
         """The partition column of the table's latest snapshot, or None for
-        flat layout — appenders match it so a table never mixes layouts."""
+        flat layout. The crawl probe confirms against `seen`'s bucket dirs
+        only where this is "bucket"."""
         snaps = self.snapshots(name)
         return snaps[-1].get("partition_by") if snaps else None
 

@@ -9,9 +9,12 @@ engine's analog of the reference's sort+skip restart idiom,
 
 import json
 import os
+import re
 import shutil
 
-from mongodb_postproc_spark.crawl.engine import CrawlEngine
+import pytest
+
+from mongodb_postproc_spark.crawl.engine import STATE_FORMAT, CrawlEngine
 from mongodb_postproc_spark.crawl.simulator import simulate_crawl
 from mongodb_postproc_spark.datagen.web import CrawlConfig, WebConfig
 
@@ -144,4 +147,31 @@ def test_run_round_retry_in_process_reconciles(spark, tmp_path):
             break
         state, _ = out
 
+    assert _fetch_order(eng) == simulate_crawl(CFG).fetch_order
+
+
+def test_other_format_workdir_is_refused_until_forced_fresh(spark, tmp_path):
+    """A _state.json without this engine's format stamp, or with another
+    one, is never resumed or migrated: run() raises ValueError naming the
+    way out, and run(resume=False) then crawls the same workdir afresh."""
+    wd = str(tmp_path / "old_format")
+    one_round = CrawlConfig(n_seeds=6, max_rounds=1, per_host_cap=4, web=CFG.web)
+    CrawlEngine(spark, one_round, wd).run()
+    sp = os.path.join(wd, "_state.json")
+    with open(sp) as f:
+        state = json.load(f)
+    assert state["format"] == STATE_FORMAT
+
+    for stamp in (None, STATE_FORMAT + 1):
+        if stamp is None:
+            state.pop("format")
+        else:
+            state["format"] = stamp
+        with open(sp, "w") as f:
+            json.dump(state, f)
+        with pytest.raises(ValueError, match=re.escape("run(resume=False)")):
+            CrawlEngine(spark, CFG, wd).run()
+
+    eng = CrawlEngine(spark, CFG, wd)
+    eng.run(resume=False)
     assert _fetch_order(eng) == simulate_crawl(CFG).fetch_order

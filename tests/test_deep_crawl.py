@@ -25,7 +25,7 @@ def _mk(spark, wd, max_rounds=CFG.max_rounds):
         n_seeds=CFG.n_seeds, max_rounds=max_rounds,
         per_host_cap=CFG.per_host_cap, web=WEB,
     )
-    eng = CrawlEngine(spark, cfg, str(wd), bloom_mode="partitioned", n_buckets=N_BUCKETS)
+    eng = CrawlEngine(spark, cfg, str(wd), n_buckets=N_BUCKETS)
     eng.FRONTIER_COMPACT_MIN = 20  # exercise the fold policy at toy scale
     return eng
 

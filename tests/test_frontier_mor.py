@@ -63,23 +63,16 @@ def test_compaction_folds_deletes(spark, tmp_path):
 
 
 def test_reconcile_preserves_foreign_tables(spark, tmp_path):
-    """Crash reconcile drops only engine-produced orphans; legacy-format or
-    user tables in the same workdir survive (ADVICE round-1 medium item)."""
-    import pandas as pd
-
-    wd = str(tmp_path / "legacy")
+    """Crash reconcile drops only engine-produced orphans; a user table in
+    the same workdir survives (ADVICE round-1 medium item)."""
+    wd = str(tmp_path / "foreign")
     eng = CrawlEngine(spark, CFG, wd)
     eng.init_crawl()
     state = eng.load_state()
-    legacy = spark.createDataFrame(
-        pd.DataFrame({"seq": [0], "url_canon": ["http://h0.test/"], "host": ["h0.test"],
-                      "round": [0]}),
-        "seq long, url_canon string, host string, round int",
+    notes = spark.createDataFrame(
+        [(0, "http://h0.test/")], "note_id long, url_canon string"
     )
-    eng.catalog.create_or_replace("fetch_log", legacy)
+    eng.catalog.create_or_replace("crawl_notes", notes)
     eng._reconcile_to_state(state)
-    assert eng.catalog.exists("fetch_log")
-    # and the fetch_log view unions legacy history with new pages
-    state, stats = eng.run_round(state)
-    log = eng.fetch_log().collect()
-    assert len(log) == stats.fetched + 1
+    assert eng.catalog.exists("crawl_notes")
+    assert eng.catalog.read("crawl_notes", spark).count() == 1

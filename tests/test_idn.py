@@ -138,7 +138,7 @@ def test_engine_idn_fix_semantics(spark, mini_engine):
         ("http://brand.new.test/p", "brand.new.test", 1, 3, 1),
     ]
     new_urls = spark.createDataFrame(rows, FRONTIER_COLS)
-    got = {r["url_canon"]: r for r in eng._idn_fix(new_urls, seen, state).collect()}
+    got = {r["url_canon"]: r for r in eng._idn_fix(new_urls, state).collect()}
     assert set(got) == {
         "http://xn--bcher-kva.example/p/1",
         "http://brand.new.test/p",

@@ -1,7 +1,8 @@
 import pandas as pd
 
 from mongodb_postproc_spark.crawl.engine import CrawlEngine
-from mongodb_postproc_spark.crawl.seen import Bloom, merge_state
+from mongodb_postproc_spark.crawl.seen import Bloom
+from mongodb_postproc_spark.crawl.simulator import simulate_crawl
 from mongodb_postproc_spark.datagen.web import CrawlConfig, WebConfig
 
 
@@ -27,47 +28,28 @@ def test_bloom_serde_and_merge():
     u2 = pd.Series([f"http://y.test/{i}" for i in range(200)])
     b1.add(u1)
     b2.add(u2)
-    merged = merge_state(
-        [{"bloom_bytes": b1.to_bytes()}, {"bloom_bytes": b2.to_bytes()}]
-    )
-    assert len(merged) == 1  # one shared geometry -> one merged filter
-    assert merged[0].contains(u1).all() and merged[0].contains(u2).all()
-    # mixed geometries merge independently instead of asserting
-    b3 = Bloom(b1.n_bits * 2, b1.n_hashes)
-    b3.add(u1)
-    mixed = merge_state(
-        [{"bloom_bytes": b1.to_bytes()}, {"bloom_bytes": b3.to_bytes()}]
-    )
-    assert len(mixed) == 2
-    from mongodb_postproc_spark.crawl.seen import contains_any
-    assert contains_any(mixed, u1).all()
+    r1, r2 = Bloom.from_bytes(b1.to_bytes()), Bloom.from_bytes(b2.to_bytes())
+    assert (r1.n_bits, r1.n_hashes) == (b1.n_bits, b1.n_hashes)
+    assert (r1.bits == b1.bits).all()
+    merged = r1.merge(r2)
+    assert merged.contains(u1).all() and merged.contains(u2).all()
 
 
 def test_engine_bloom_vs_exact_identical(spark, tmp_path):
-    """Bloom is a pure prefilter: crawl output with and without it must be
-    byte-identical (false positives confirmed by the exact anti-join) — in
-    BOTH loader modes (partitioned executor-side slices and the legacy
-    broadcast merge)."""
+    """The Bloom is a pure prefilter: the bucketed crawl's fetch order and
+    seen set must equal the sequential simulator's exactly (false positives
+    are confirmed against the exact seen slice, never dropped)."""
     cfg = CrawlConfig(
         n_seeds=5, max_rounds=2, per_host_cap=3,
         web=WebConfig(n_hosts=5, hot_pages=40, cold_pages=10, seed="bloom-v1"),
     )
-    outs = {}
-    variants = {
-        "partitioned": dict(use_bloom=True, bloom_mode="partitioned", n_buckets=4),
-        "broadcast": dict(use_bloom=True, bloom_mode="broadcast"),
-        "exact": dict(use_bloom=False),
-    }
-    for tag, kw in variants.items():
-        wd = str(tmp_path / f"bloom_{tag}")
-        eng = CrawlEngine(spark, cfg, wd, **kw)
-        eng.run()
-        outs[tag] = (
-            [(r["seq"], r["url_canon"]) for r in eng.fetch_log().collect()],
-            {r["url_canon"] for r in eng.seen_set().collect()},
-        )
-    assert outs["partitioned"] == outs["exact"]
-    assert outs["broadcast"] == outs["exact"]
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "bloom"), n_buckets=4)
+    eng.run()
+    sim = simulate_crawl(cfg)
+    assert [(r["seq"], r["url_canon"]) for r in eng.fetch_log().collect()] == [
+        (seq, url) for seq, url, _host, _rnd in sim.fetch_order
+    ]
+    assert {r["url_canon"] for r in eng.seen_set().collect()} == sim.seen
 
 
 def test_partitioned_state_is_bucket_sliced(spark, tmp_path):
@@ -83,7 +65,7 @@ def test_partitioned_state_is_bucket_sliced(spark, tmp_path):
         web=WebConfig(n_hosts=5, hot_pages=40, cold_pages=10, seed="bloom-v2"),
     )
     wd = str(tmp_path / "part_state")
-    eng = CrawlEngine(spark, cfg, wd, bloom_mode="partitioned", n_buckets=4)
+    eng = CrawlEngine(spark, cfg, wd, n_buckets=4)
     eng.run()
     dirs = eng.catalog.member_dirs("seen_state")
     assert any(
@@ -125,7 +107,7 @@ def test_round_plan_never_scans_seen(spark, tmp_path):
         web=WebConfig(n_hosts=5, hot_pages=40, cold_pages=10, seed="plan-v1"),
     )
     wd = str(tmp_path / "plan_audit")
-    eng = CrawlEngine(spark, cfg, wd, bloom_mode="partitioned", n_buckets=4)
+    eng = CrawlEngine(spark, cfg, wd, n_buckets=4)
     eng.run()
     state = eng.load_state()
     seen = eng.catalog.read("seen", spark, snapshot=state["snapshots"]["seen"])
@@ -140,7 +122,7 @@ def test_round_plan_never_scans_seen(spark, tmp_path):
         .withColumn("depth", F.lit(1))
         .select(*FRONTIER_COLS)
     )
-    new = eng._dedup_filter_unseen(candidates, seen, state)
+    new = eng._dedup_filter_unseen(candidates, state)
     plan = new._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
@@ -149,36 +131,6 @@ def test_round_plan_never_scans_seen(spark, tmp_path):
     assert "Join" not in plan, f"unexpected join in the confirmer plan:\n{plan}"
     got = {r["url_canon"] for r in new.collect()}
     assert got == set(cand_urls) - seen_urls
-
-
-def test_broadcast_resume_with_different_geometry(spark, tmp_path):
-    """A broadcast-mode workdir resumed with a different expected_urls (so a
-    different bloom geometry) holds state rows of TWO shapes; the loader
-    must merge per shape and probe all of them instead of asserting — and
-    the crawl output must still equal the exact (no-bloom) run."""
-    cfg1 = CrawlConfig(
-        n_seeds=5, max_rounds=1, per_host_cap=3,
-        web=WebConfig(n_hosts=5, hot_pages=40, cold_pages=10, seed="bloom-v1"),
-    )
-    cfg2 = CrawlConfig(
-        n_seeds=5, max_rounds=2, per_host_cap=3, web=cfg1.web,
-    )
-    wd = str(tmp_path / "bloom_geo")
-    CrawlEngine(spark, cfg1, wd, use_bloom=True, bloom_mode="broadcast",
-                expected_urls=1_000).run()
-    eng = CrawlEngine(spark, cfg2, wd, use_bloom=True, bloom_mode="broadcast",
-                      expected_urls=50_000)  # different geometry from round 0's
-    eng.run()
-
-    wd_exact = str(tmp_path / "bloom_geo_exact")
-    exact = CrawlEngine(spark, cfg2, wd_exact, use_bloom=False)
-    exact.run()
-    got = [(r["seq"], r["url_canon"]) for r in eng.fetch_log().collect()]
-    want = [(r["seq"], r["url_canon"]) for r in exact.fetch_log().collect()]
-    assert got == want
-    assert {r["url_canon"] for r in eng.seen_set().collect()} == {
-        r["url_canon"] for r in exact.seen_set().collect()
-    }
 
 
 def test_bucketed_round_never_reads_seen(spark, tmp_path):

@@ -61,9 +61,7 @@ def test_compacted_crawl_identical_and_bounded(spark, tmp_path, monkeypatch):
     n_buckets = 4
 
     wd_plain = str(tmp_path / "plain")
-    eng_plain = CrawlEngine(
-        spark, cfg, wd_plain, bloom_mode="partitioned", n_buckets=n_buckets
-    )
+    eng_plain = CrawlEngine(spark, cfg, wd_plain, n_buckets=n_buckets)
     eng_plain.run()
     out_plain = (
         [(r["seq"], r["url_canon"]) for r in eng_plain.fetch_log().collect()],
@@ -72,7 +70,7 @@ def test_compacted_crawl_identical_and_bounded(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(CrawlEngine, "SEEN_COMPACT_EPOCHS", 2)
     wd_c = str(tmp_path / "compacted")
-    eng_c = CrawlEngine(spark, cfg, wd_c, bloom_mode="partitioned", n_buckets=n_buckets)
+    eng_c = CrawlEngine(spark, cfg, wd_c, n_buckets=n_buckets)
     eng_c.run()
     out_c = (
         [(r["seq"], r["url_canon"]) for r in eng_c.fetch_log().collect()],
@@ -99,14 +97,9 @@ def test_compacted_crawl_identical_and_bounded(spark, tmp_path, monkeypatch):
         n_seeds=8, max_rounds=6, per_host_cap=3,
         web=WebConfig(n_hosts=6, hot_pages=40, cold_pages=10, seed="compact-v1"),
     )
-    eng_plain6 = CrawlEngine(
-        spark, cfg6, str(tmp_path / "plain6"), bloom_mode="partitioned",
-        n_buckets=n_buckets,
-    )
+    eng_plain6 = CrawlEngine(spark, cfg6, str(tmp_path / "plain6"), n_buckets=n_buckets)
     eng_plain6.run()
-    eng_resume = CrawlEngine(
-        spark, cfg6, wd_c, bloom_mode="partitioned", n_buckets=n_buckets
-    )
+    eng_resume = CrawlEngine(spark, cfg6, wd_c, n_buckets=n_buckets)
     eng_resume.run(resume=True)
     assert [
         (r["seq"], r["url_canon"]) for r in eng_resume.fetch_log().collect()

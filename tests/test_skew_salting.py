@@ -1,75 +1,9 @@
-"""salted_join == plain join, row-for-row, on adversarially skewed input.
-
-The fact table puts 90% of its rows on one key (the hot-host shape); the
-salted join must return the identical multiset of rows while spreading the
-hot key across n_salts shuffle partitions (asserted on the salted fact
-side's distinct salt count for the hot key).
-"""
+"""skewed_running_sum == the plain running-sum window, row-for-row, with
+the hot partition split across tasks (90% of rows on one host)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-from mongodb_postproc_spark.functions.skew import salted_join
-
-
-@pytest.fixture(scope="module")
-def skewed(spark):
-    n = 2000
-    fact = spark.range(n).select(
-        F.col("id").alias("row_id"),
-        F.when(F.col("id") % 10 < 9, F.lit(7)).otherwise(F.col("id") % 5).alias("k"),
-        (F.col("id") * 3).alias("payload"),
-    )
-    dim = spark.createDataFrame(
-        [(i, f"dim-{i}") for i in range(10)], "k long, label string"
-    )
-    return fact, dim
-
-
-def _key(rows):
-    return sorted((r["row_id"], r["k"], r["payload"], r["label"]) for r in rows)
-
-
-def test_salted_equals_plain(spark, skewed):
-    fact, dim = skewed
-    plain = fact.join(dim, "k")
-    salted = salted_join(fact, dim, key="k", row_unique="row_id", n_salts=8)
-    assert _key(salted.collect()) == _key(plain.collect())
-
-
-def test_hot_key_spreads_over_salts(spark, skewed):
-    fact, _ = skewed
-    salts = (
-        fact.withColumn("__salt", F.pmod(F.xxhash64("row_id"), F.lit(8)))
-        .filter(F.col("k") == 7)
-        .select("__salt")
-        .distinct()
-        .count()
-    )
-    assert salts == 8  # 1800 hot rows hash across all 8 salt partitions
-
-
-def test_left_join_preserves_unmatched(spark, skewed):
-    fact, dim = skewed
-    dim_small = dim.filter(F.col("k") != 7)  # drop the hot key's dim row
-    plain = fact.join(dim_small, "k", "left")
-    salted = salted_join(fact, dim_small, key="k", row_unique="row_id", n_salts=8, how="left")
-    want = sorted((r["row_id"], r["k"], r["payload"], r["label"]) for r in plain.collect())
-    got = sorted((r["row_id"], r["k"], r["payload"], r["label"]) for r in salted.collect())
-    assert got == want
-
-
-def test_dim_preserving_joins_rejected(spark, skewed):
-    """right/full outer would emit each unmatched dim row n_salts times
-    (the dim side is replicated per salt) — salted_join refuses them."""
-    import pytest
-
-    fact, dim = skewed
-    for how in ("right", "full", "full_outer", "right_outer"):
-        with pytest.raises(ValueError, match="fact-preserving"):
-            salted_join(fact, dim, key="k", row_unique="row_id", how=how)
 
 
 def test_skewed_running_sum_pathological_host(spark):

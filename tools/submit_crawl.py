@@ -37,7 +37,7 @@ def main() -> None:
     # Import AFTER spark-submit has shipped the --py-files zip.
     from pyspark.sql import SparkSession
 
-    from mongodb_postproc_spark.crawl.engine import ENGINE_TABLES, CrawlEngine
+    from mongodb_postproc_spark.crawl.engine import CrawlEngine
     from mongodb_postproc_spark.datagen.web import CrawlConfig, WebConfig
 
     spark = (
@@ -59,25 +59,12 @@ def main() -> None:
         # steady-state per-round wall time through the SUBMITTED artifact —
         # the deployment-path cross-check of bench.py's in-process scaling
         # ladder (seed ingest untimed, same protocol as BASELINE.md).
-        # Same reset/resume preamble as engine.run(): without --resume, any
-        # engine tables and state in a reused workdir are dropped BEFORE
-        # init_crawl — a stale `pages` table would otherwise append and
-        # duplicate fetch-log rows (the hazard engine.run() documents).
-        import os
+        # engine.run()'s own reset/resume preamble: without --resume, a
+        # reused workdir's engine tables and state are dropped BEFORE
+        # init_crawl.
         import time
 
-        state = eng.load_state() if args.resume else None
-        if state is None:
-            for name in ENGINE_TABLES + ("fetch_log", "images"):
-                if eng.catalog.exists(name):
-                    eng.catalog.drop(name)
-            p = eng._state_path()
-            if os.path.exists(p):
-                os.remove(p)
-            eng.init_crawl()
-            state = eng.load_state()
-        else:
-            eng._reconcile_to_state(state)
+        state = eng._start(resume=args.resume)
         stats, timed = [], []
         while state["round_completed"] + 1 < cfg.max_rounds:
             t0 = time.monotonic()

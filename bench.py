@@ -149,7 +149,7 @@ def run_crawl_bench(spark, n_urls: int) -> dict:
 
     cfg = _crawl_bench_cfg(n_urls)
     wd = _bench_workdir()
-    eng = CrawlEngine(spark, cfg, wd, expected_urls=max(n_urls * 8, 100_000))
+    eng = CrawlEngine(spark, cfg, wd)
     eng.init_crawl()
     state = eng.load_state()
     t0 = time.monotonic()

@@ -3,8 +3,8 @@
 A from-scratch re-expression of the capabilities of the reference pipeline
 ``hshts/mongoDB_postproc`` (see SURVEY.md) on the Spark DataFrame/SQL stack:
 
-- ``crawl``      : URL frontier + fetch scheduler (canonicalize, Bloom seen-set,
-                   robots, per-host politeness windows, checkpoint/resume).
+- ``crawl``      : URL frontier + fetch scheduler (canonicalize, bucketed
+                   fingerprint seen-set, robots, per-host politeness windows, checkpoint/resume).
                    Semantics spec: /root/reference/findMissingPages.py:24-44.
 - ``datagen``    : deterministic synthetic web + image/caption payload
                    generators (seeded; no wall clock).

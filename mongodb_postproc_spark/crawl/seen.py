@@ -1,171 +1,39 @@
-"""Partitioned Bloom-filter URL-seen set.
+"""Bucket-sliced exact URL-seen set: one sorted 128-bit fingerprint array
+per bucket.
 
 North-rule component: dedup at 10^10 URLs cannot anti-join every candidate
-against the full seen table — the Bloom prunes the shuffle. Semantics are
-kept EXACT (the fixtures demand the exact set, SURVEY.md §7 "What's hard"):
+against the full seen table every round. Instead the `seen` table is
+hash-partitioned into ``bucket = pmod(hash(url_canon), n_buckets)`` dirs
+(Murmur3 — the same hash Spark's shuffle partitioning uses, so bucket
+slices align with the dedup aggregate's partitions and the probe needs no
+shuffle), and each probe task loads ONLY the slices of the buckets it
+holds, straight from parquet (``load_bucket_seen_hashes``), cached per
+python worker process. Semantics are EXACT (the fixtures demand the exact
+set, SURVEY.md §7 "What's hard").
 
-  - might_contain == False  ->  definitely unseen: pass through, no shuffle.
-  - might_contain == True   ->  maybe seen: the bucket's exact seen slice
-                                confirms (``load_bucket_seen_hashes``; Bloom
-                                false positives would otherwise DROP real
-                                URLs). On Iceberg, which has no bucket dirs
-                                to slice, an anti-join against ``seen``
-                                confirms instead (engine._dedup_filter_unseen).
+The membership structure is a fingerprint filter — the family a cuckoo
+filter belongs to — with full 128-bit fingerprints kept sorted, so a probe
+is a binary search and false positives are physically negligible (see
+``load_bucket_seen_hashes``). It replaced a per-epoch Bloom prefilter whose
+merged per-bucket filter saturated as the crawl grew (false-positive rate
+48% at 10k URLs per bucket, 99.7% at 34k): past that point the Bloom passed
+nearly every candidate to this same slice and was pure cost. One structure
+per bucket now does both jobs, and ``CrawlEngine.compact_seen_state``
+rewrites `seen` to one file per bucket dir so a slice load stays O(1) files
+regardless of round count.
 
-State layout (FIXTURES.md `seen_state`): the seen set is hash-partitioned
-into ``bucket = pmod(hash(url_canon), n_buckets)`` slices (Murmur3 — the
-same hash Spark's shuffle partitioning uses, so bucket slices align with
-the dedup aggregate's partitions and the probe needs no shuffle); one row per
-(bucket, epoch) — (bucket, epoch, bloom_bytes, n_items) — persisted through
-the table catalog partitioned by bucket on disk. Epochs are crawl rounds.
-
-Querying at 10^10 never materializes the merged filter on the driver:
-candidates are grouped by the same bucket expression and each task loads
-ONLY its bucket's bloom rows straight from the state table's parquet
-(``load_bucket_blooms``), cached per python worker process. At 10^10 seen
-URLs / 1% fpp the full filter is ~12 GB — per-bucket slices keep any one
-task's working set at filter_size/n_buckets. Per-epoch rows plus the
-periodic fold (``fold_bucket_state``) make this one sliding-window
-structure; no whole-filter merged copy is kept beside it.
-
-The filter itself is pure numpy (no JVM dependency): double hashing
-h_i = (h1 + i*h2) mod m over two independent 60-bit md5-derived hashes
-(functions/hashes.py) — deterministic across processes and engines.
+On Iceberg the catalog reports no bucket layout for `seen`, so there are no
+slices to load: there the new-URL set is an anti-join against `seen`
+(engine._dedup_filter_unseen).
 """
 
 from __future__ import annotations
 
-import math
+import hashlib
 import os
-import zlib
 
 import numpy as np
 import pandas as pd
-
-from ..functions.hashes import h60
-
-
-class Bloom:
-    def __init__(self, n_bits: int, n_hashes: int, bits: np.ndarray | None = None):
-        self.n_bits = n_bits
-        self.n_hashes = n_hashes
-        self.bits = bits if bits is not None else np.zeros((n_bits + 7) // 8, dtype=np.uint8)
-
-    @classmethod
-    def sized_for(cls, n_items: int, fpp: float = 0.01) -> "Bloom":
-        n_items = max(n_items, 64)
-        n_bits = int(-n_items * math.log(fpp) / (math.log(2) ** 2))
-        n_hashes = max(1, round(n_bits / n_items * math.log(2)))
-        return cls(n_bits, n_hashes)
-
-    def _positions(self, urls: pd.Series) -> np.ndarray:
-        h1 = urls.map(lambda u: h60("b1|" + u)).to_numpy(dtype=np.uint64)
-        h2 = urls.map(lambda u: h60("b2|" + u)).to_numpy(dtype=np.uint64)
-        i = np.arange(self.n_hashes, dtype=np.uint64)[:, None]
-        return ((h1[None, :] + i * h2[None, :]) % np.uint64(self.n_bits)).astype(np.int64)
-
-    def add(self, urls: pd.Series) -> None:
-        if len(urls) == 0:
-            return
-        pos = self._positions(urls).ravel()
-        np.bitwise_or.at(self.bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-
-    def contains(self, urls: pd.Series) -> np.ndarray:
-        if len(urls) == 0:
-            return np.zeros(0, dtype=bool)
-        pos = self._positions(urls)  # (k, n)
-        hit = (self.bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-        return hit.all(axis=0)
-
-    # ------------------------------------------------------------ serde
-    def to_bytes(self) -> bytes:
-        header = np.array([self.n_bits, self.n_hashes], dtype=np.int64).tobytes()
-        return header + zlib.compress(self.bits.tobytes(), 3)
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "Bloom":
-        n_bits, n_hashes = np.frombuffer(data[:16], dtype=np.int64)
-        bits = np.frombuffer(zlib.decompress(data[16:]), dtype=np.uint8).copy()
-        return cls(int(n_bits), int(n_hashes), bits)
-
-    def merge(self, other: "Bloom") -> "Bloom":
-        assert (self.n_bits, self.n_hashes) == (other.n_bits, other.n_hashes)
-        return Bloom(self.n_bits, self.n_hashes, np.bitwise_or(self.bits, other.bits))
-
-
-def make_bucket_state_builder(epoch: int, n_bits: int, n_hashes: int):
-    """groupBy(bucket).applyInPandas builder: one bucket's new-seen URLs ->
-    one (bucket, epoch, bloom_bytes, n_items) state row. Every URL of a
-    bucket lands in that bucket's bloom, so a bucket absent from the state
-    table provably contains no seen URLs."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = Bloom(n_bits, n_hashes)
-        b.add(pdf["url_canon"])
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "epoch": [epoch],
-                "bloom_bytes": [b.to_bytes()],
-                "n_items": [len(pdf)],
-            }
-        )
-
-    return build
-
-
-def fold_bucket_state(pdf: pd.DataFrame) -> pd.DataFrame:
-    """groupBy(bucket).applyInPandas compaction fold: OR one bucket's
-    accumulated per-epoch bloom rows into a single row per bloom geometry —
-    exactly the merge every probe performs on read, done once at write time.
-    Without it the state table holds one row per (bucket, epoch) forever:
-    at 10^10 URLs over thousands of rounds that is thousands of files per
-    bucket to list, read and OR on every probe-cache miss. After the fold
-    the table is O(n_buckets) rows and one file read per bucket slice.
-
-    ``epoch`` becomes the max epoch folded in (the probe cache token only
-    needs monotonicity); ``n_items`` sums exactly because each round's
-    new-seen set is disjoint from all earlier rounds by construction.
-    The row loop is over per-epoch STATE rows (a handful per bucket),
-    not data rows."""
-    acc: dict[tuple[int, int], tuple[Bloom, int, int]] = {}
-    bucket = int(pdf["bucket"].iloc[0])
-    for ep, bb, ni in zip(pdf["epoch"], pdf["bloom_bytes"], pdf["n_items"]):
-        b = Bloom.from_bytes(bb)
-        shape = (b.n_bits, b.n_hashes)
-        if shape in acc:
-            m, mep, n = acc[shape]
-            acc[shape] = (m.merge(b), max(mep, int(ep)), n + int(ni))
-        else:
-            acc[shape] = (b, int(ep), int(ni))
-    out = {"bucket": [], "epoch": [], "bloom_bytes": [], "n_items": []}
-    for shape in sorted(acc):
-        m, ep, n = acc[shape]
-        out["bucket"].append(bucket)
-        out["epoch"].append(ep)
-        out["bloom_bytes"].append(m.to_bytes())
-        out["n_items"].append(n)
-    return pd.DataFrame(out)
-
-
-# ---------------------------------------------------------------------------
-# Executor-side sliced loading. Module-level cache: python workers are
-# reused across tasks (spark.python.worker.reuse), and module state — unlike
-# function globals, which cloudpickle rebuilds per task — survives with the
-# worker process. Keys are content-stable (file path + mtime), never id().
-# ---------------------------------------------------------------------------
-
-_FILE_BLOOM_CACHE: dict = {}
-
-
-def _bloom_rows_from_file(path: str) -> list[Bloom]:
-    key = (path, os.path.getmtime(path))
-    if key not in _FILE_BLOOM_CACHE:
-        import pyarrow.parquet as pq
-
-        col = pq.read_table(path, columns=["bloom_bytes"]).column("bloom_bytes")
-        _FILE_BLOOM_CACHE[key] = [Bloom.from_bytes(v.as_py()) for v in col]
-    return _FILE_BLOOM_CACHE[key]
 
 
 def _parquet_files(d: str) -> list[str]:
@@ -176,129 +44,91 @@ def _parquet_files(d: str) -> list[str]:
     )
 
 
-_MERGED_CACHE: dict = {}
-
-
-def load_bucket_blooms(member_dirs: list[str], bucket: int) -> list[Bloom]:
-    """Load the bloom rows for ONE bucket slice from the seen_state table's
-    data dirs (``snap=k/__pdir=<bucket>/``). On Iceberg the member dirs
-    are the data files' own parents (``…/bucket=N``), with no
-    ``__pdir=`` level below them: their files are read for every bucket —
-    a superset 'maybe'. Iceberg confirms every bloom-positive row by an
-    anti-join, so the result stays exact.
-
-    Same-shaped blooms (one per epoch) are pre-OR-merged and the merge is
-    cached per worker, so a probe computes each URL's hash positions once
-    per distinct bloom geometry, not once per epoch. Probe the returned
-    list with ``contains_any``."""
-    files: list[str] = []
-    for d in member_dirs:
-        files.extend(_parquet_files(os.path.join(d, f"__pdir={bucket}")))
-        files.extend(_parquet_files(d))  # Iceberg data-file dirs
-    # keyed by bucket with the file-set token as the VALUE guard: each
-    # round's append makes a new token, and storing (token, value) under
-    # the bare bucket key evicts the superseded round's merged slice
-    # immediately — the cache holds at most n_buckets live entries instead
-    # of every historical round's copy (which at 10^10 scale is a
-    # worker-OOM, not a nicety)
-    token = tuple((f, os.path.getmtime(f)) for f in files)
-    hit = _MERGED_CACHE.get(bucket)
-    if hit is not None and hit[0] == token:
-        return hit[1]
-    by_shape: dict[tuple[int, int], Bloom] = {}
-    for f in files:
-        for b in _bloom_rows_from_file(f):
-            shape = (b.n_bits, b.n_hashes)
-            by_shape[shape] = b if shape not in by_shape else by_shape[shape].merge(b)
-    merged = list(by_shape.values())
-    if len(_FILE_BLOOM_CACHE) > 4096:  # superseded/compacted-away files
-        _FILE_BLOOM_CACHE.clear()
-    _MERGED_CACHE[bucket] = (token, merged)
-    return merged
-
-
-_FILE_HASH_CACHE: dict = {}
-
-
 def url_hash128(urls: "pd.Series | list[str]") -> tuple[np.ndarray, np.ndarray]:
     """128-bit md5 of each canonical URL as two uint64 arrays (little-endian
-    halves; the ``s|`` prefix domain-separates from the Bloom's b1|/b2|
-    hashes). Deterministic across processes/engines like everything in
-    functions/hashes.py."""
-    import hashlib
-
-    n = len(urls)
-    a = np.empty(n, dtype=np.uint64)
-    b = np.empty(n, dtype=np.uint64)
-    for i, u in enumerate(urls):
-        d = hashlib.md5(("s|" + u).encode("utf-8")).digest()
-        a[i] = int.from_bytes(d[:8], "little")
-        b[i] = int.from_bytes(d[8:], "little")
-    return a, b
+    halves of the digest; the ``s|`` prefix domain-separates these hashes
+    from every other md5 use in the repo). Deterministic across
+    processes/engines like everything in functions/hashes.py. The digests
+    are joined into one buffer and split by numpy, so the only per-URL
+    Python is the md5 call itself."""
+    digests = b"".join(hashlib.md5(("s|" + u).encode("utf-8")).digest() for u in urls)
+    halves = np.frombuffer(digests, dtype="<u8").reshape(-1, 2)
+    return halves[:, 0].astype(np.uint64), halves[:, 1].astype(np.uint64)
 
 
 def _hashes_from_file(path: str) -> tuple[np.ndarray, np.ndarray]:
-    key = (path, os.path.getmtime(path))
-    if key not in _FILE_HASH_CACHE:
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        col = pq.read_table(path, columns=["url_canon"]).column("url_canon")
-        _FILE_HASH_CACHE[key] = url_hash128(col.to_pylist())
-    return _FILE_HASH_CACHE[key]
+    # ParquetFile reads the one file directly; read_table would build a
+    # dataset around it first, ~6x the cost on a small bucket file
+    col = pq.ParquetFile(path).read(columns=["url_canon"], use_threads=False)
+    return url_hash128(col.column("url_canon").to_pylist())
 
+
+# ---------------------------------------------------------------------------
+# Executor-side sliced loading. Module-level cache: python workers are
+# reused across tasks (spark.python.worker.reuse), and module state — unlike
+# function globals, which cloudpickle rebuilds per task — survives with the
+# worker process. Keys are content-stable (file path + mtime), never id().
+# ---------------------------------------------------------------------------
 
 _SEENHASH_CACHE: dict = {}
+
+_EMPTY_SLICE = (np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.uint64))
 
 
 def load_bucket_seen_hashes(
     member_dirs: list[str], bucket: int
 ) -> tuple[np.ndarray, np.ndarray]:
     """Seen-URL membership structure for ONE bucket slice of the
-    bucket-partitioned `seen` table (``snap=k/__pdir=<bucket>/``) — the
-    executor-side exact confirmer behind the Bloom probe. Each task reads
-    only the bucket dirs of rows it holds, straight from parquet, cached
-    per python worker (file-level hash arrays survive round-over-round
-    appends; only the round's new file is parsed and hashed).
+    bucket-partitioned `seen` table (``snap=k/__pdir=<bucket>/``). Each
+    task reads only the bucket dirs of rows it holds, straight from
+    parquet, cached per python worker.
 
     Representation: the slice is a lexsorted pair of uint64 arrays holding
     the 128-bit md5 of each seen URL — 16 bytes/URL flat numpy instead of
-    ~100 bytes/URL of python-str frozenset (the r3 judge's working-set
-    concern), probed by binary search (:func:`seenhash_contains`).
-    Membership by 128-bit hash equality: the chance ANY unseen URL of a
-    10^10-URL crawl false-matches a 10^10-entry seen set is
-    ~10^20/2^128 ≈ 3e-19 — far below hardware corruption rates, so the
-    fixtures' exact-match guarantee is preserved in every physically
+    ~100 bytes/URL of python-str frozenset, probed by binary search
+    (:func:`seenhash_contains`). Membership by 128-bit hash equality: the
+    chance ANY unseen URL of a 10^10-URL crawl false-matches a 10^10-entry
+    seen set is ~10^20/2^128 ≈ 3e-19 — far below hardware corruption rates,
+    so the fixtures' exact-match guarantee is preserved in every physically
     realizable run (a string-compare fallback on hash hits would re-read
     the slice's URL column and erase the memory win; rejected on that
     measurement).
 
-    This is what removes the full-`seen` shuffle from the round plan: a
+    This is what keeps the full `seen` table out of the round plan: a
     left-anti join against the 10^10-row seen table would sort-merge-shuffle
-    the whole right side every round, whereas membership against the aligned
-    slice touches O(|seen|/n_buckets) rows per task — and only for buckets
-    that actually produced Bloom-positive candidates. At target scale
-    n_buckets grows with |seen| (the same sizing argument as the bloom
-    slices), keeping any one task's working set bounded."""
+    the whole right side every round, whereas membership against the
+    aligned slice touches O(|seen|/n_buckets) rows per task. At target
+    scale n_buckets grows with |seen|, keeping any one task's working set
+    bounded.
+
+    The cache holds one (file-set token, slice) entry per bucket. When a
+    round appends to the bucket, only the new files are read and hashed
+    into the cached slice; when the file set changed any other way (the
+    compaction replaced the bucket's files, or a rollback dropped some),
+    the slice is rebuilt from the current files. Either way the
+    superseded entry is replaced, so a worker never holds a slice of files
+    that are no longer in the table."""
     files: list[str] = []
     for d in member_dirs:
         files.extend(_parquet_files(os.path.join(d, f"__pdir={bucket}")))
-    # same bucket-keyed (token, value) scheme as _MERGED_CACHE: the merged
-    # slice of a superseded round is dropped the moment its bucket is
-    # re-requested, bounding live entries at n_buckets
     token = tuple((f, os.path.getmtime(f)) for f in files)
     hit = _SEENHASH_CACHE.get(bucket)
     if hit is not None and hit[0] == token:
         return hit[1]
-    if files:
+    if hit is not None and set(hit[0]) <= set(token):
+        cached = set(hit[0])
+        parts = [hit[1]] + [_hashes_from_file(f) for f, m in token if (f, m) not in cached]
+    else:
         parts = [_hashes_from_file(f) for f in files]
+    if parts:
         a = np.concatenate([p[0] for p in parts])
         b = np.concatenate([p[1] for p in parts])
         order = np.lexsort((b, a))
         merged = (a[order], b[order])
     else:
-        merged = (np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.uint64))
-    if len(_FILE_HASH_CACHE) > 4096:  # superseded/compacted-away files
-        _FILE_HASH_CACHE.clear()
+        merged = _EMPTY_SLICE
     _SEENHASH_CACHE[bucket] = (token, merged)
     return merged
 
@@ -328,15 +158,4 @@ def seenhash_contains(
                 out[i] = True
                 break
             j += 1
-    return out
-
-
-def contains_any(blooms: list[Bloom], urls: pd.Series) -> np.ndarray:
-    if not blooms:
-        return np.zeros(len(urls), dtype=bool)
-    out = blooms[0].contains(urls)
-    for b in blooms[1:]:
-        if out.all():
-            break
-        out |= b.contains(urls)
     return out

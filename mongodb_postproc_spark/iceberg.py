@@ -186,8 +186,9 @@ class IcebergTableCatalog:
 
     def member_dirs(self, name: str, snapshot: int | None = None) -> list[str]:
         """Data-file parents from the .files metadata table — what the
-        parquet manifest tracks by construction. Used by the sliced-Bloom
-        loader, whose tasks read parquet data files directly."""
+        parquet manifest tracks by construction. The crawl's bucket-slice
+        probe reads parquet data files directly, but only on the parquet
+        catalog's bucket layout (partition_layout is None here)."""
         import os
 
         tbl = self._tbl(name)

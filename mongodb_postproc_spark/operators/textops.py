@@ -16,7 +16,8 @@ skew-free by construction of the hash. At 100 TB the LSH band join is the
 classic near-dup pipeline (shingle → minhash → band → bucket join) with
 bucket sizes bounded by band width; no pairwise O(n²) stage ever
 materializes (the exact-Jaccard confirmer runs only on bucket-collision
-candidates, mirroring Bloom-prefilter + exact-confirm in the crawl).
+candidates, the way the crawl's seen probe checks only the bucket slice a
+candidate hashes to).
 """
 
 from __future__ import annotations

@@ -32,8 +32,9 @@ def get_spark(
 
     ``cores=None`` -> local[*]. Pass an int to pin parallelism (the bench
     scaling runs use 8 vs 32). ``bench=True`` selects the large pre-touched
-    heap (see below); tests/dev sessions keep a small lazily-grown heap so a
-    unit test neither needs 16 GB free nor pays the multi-second pre-touch.
+    heap (see ``bench_heap_mb``); tests/dev sessions keep a small
+    lazily-grown heap so a unit test neither commits it nor pays the
+    multi-second pre-touch.
     Override either way with SPARK_GRAFT_PREALLOC=0/1 + SPARK_GRAFT_DRIVER_MEM.
 
     ``SPARK_GRAFT_MASTER_TEMPLATE`` (e.g. ``local-cluster[{n},1,3072]``)
@@ -60,10 +61,12 @@ def get_spark(
     # this kernel page-faults through THP compaction — a cold 4.7M-row
     # shuffle measured 64s at 25% system time vs 18s at 1% with
     # -Xms=-Xmx + AlwaysPreTouch (one-time ~3s at session start). Gated off
-    # for tests/dev so small sessions don't commit 16 GB up front.
+    # for tests/dev so small sessions don't commit the heap up front.
     prealloc_env = os.environ.get("SPARK_GRAFT_PREALLOC")
     prealloc = bench if prealloc_env is None else prealloc_env == "1"
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g" if prealloc else "4g")
+    driver_mem = os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", f"{bench_heap_mb()}m" if prealloc else "4g"
+    )
     java_opts = f"-Xms{driver_mem} -XX:+AlwaysPreTouch" if prealloc else ""
 
     builder = (
@@ -87,6 +90,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+BENCH_HEAP_CAP_MB = 16 * 1024
+
+
+def bench_heap_mb() -> int:
+    """Pre-touched bench heap: BENCH_HEAP_CAP_MB, or a third of the host's
+    MemAvailable when that is smaller, in 256 MB steps. A fixed 16 GB heap
+    cannot start on a 15 GB host — the pre-touch commits all of it — and
+    the Python workers and page cache need the rest of the memory."""
+    try:
+        with open("/proc/meminfo") as f:
+            avail_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:"))
+    except (OSError, StopIteration):  # no Linux meminfo: keep the cap
+        return BENCH_HEAP_CAP_MB
+    return max(256, min(BENCH_HEAP_CAP_MB, avail_kb // 1024 // 3 // 256 * 256))
 
 
 def physical_cores() -> int:

@@ -9,7 +9,7 @@ pieces of state, for a deployment that ingests URL discoveries as a stream:
   key passes, every later row (same micro-batch or any later one) is
   dropped. State per key is a single boolean; at 10^10 keys the state store
   is RocksDB-backed and keys are the shuffle partition key, so state is
-  partitioned exactly like the batch Bloom state table.
+  partitioned exactly like the batch `seen` table's buckets.
 - :func:`politeness_slots_stream` — per-host politeness pacing: each host's
   URLs receive monotonically increasing fetch slots ``delay_ms`` apart,
   continuing across micro-batches (state = next free slot). The streaming

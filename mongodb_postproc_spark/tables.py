@@ -290,8 +290,9 @@ class TableCatalog:
         return entry
 
     def member_dirs(self, name: str, snapshot: int | None = None) -> list[str]:
-        """Absolute data dirs composing the view — the sliced-Bloom loader
-        hands these to executors so each task reads only its slice."""
+        """Absolute data dirs composing the view — the crawl's seen-set
+        probe hands these to executors so each task reads only its bucket
+        slices."""
         entry = self._resolve(name, snapshot)
         return [self._snap_dir(name, m) for m in entry.get("members", [])]
 

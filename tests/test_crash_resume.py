@@ -162,7 +162,8 @@ def test_other_format_workdir_is_refused_until_forced_fresh(spark, tmp_path):
         state = json.load(f)
     assert state["format"] == STATE_FORMAT
 
-    for stamp in (None, STATE_FORMAT + 1):
+    # format 1 is the layout with the seen_state Bloom table
+    for stamp in (None, 1, STATE_FORMAT + 1):
         if stamp is None:
             state.pop("format")
         else:

@@ -1,13 +1,15 @@
 """Merge-on-read maintenance at depth: a long crawl (34 rounds) must keep
-both state tables bounded by the compaction policies — seen_state rows stay
-O(n_buckets) and the frontier's delete files fold on the ~2x policy — and a
+both state tables bounded by the compaction policies — `seen`'s snapshot
+dirs stay O(1) and the frontier's delete files fold on the ~2x policy — and a
 resume that lands AFTER several compactions must still reproduce the exact
 uninterrupted fetch order (compaction is maintenance, never semantics).
 
 This is the amortized-cost story the 100-TB design depends on: without the
-folds, round N pays O(N) state files per probe and O(N) delete branches per
-frontier scan; with them both are O(1) per round.
+compactions, round N pays O(N) seen files per probe and O(N) delete
+branches per frontier scan; with them both are O(1) per round.
 """
+
+import shutil
 
 import pytest
 
@@ -30,34 +32,43 @@ def _mk(spark, wd, max_rounds=CFG.max_rounds):
     return eng
 
 
+# the round the module's crawl is interrupted at: several seen compactions
+# and frontier folds in
+RESUME_AT = 20
+
+
 @pytest.fixture(scope="module")
 def deep_run(spark, tmp_path_factory):
-    eng = _mk(spark, tmp_path_factory.mktemp("deep") / "wd")
-    stats = eng.run()
-    return eng, stats
+    """The 34-round crawl, run as RESUME_AT rounds, then resumed from disk
+    to the end. A copy of its workdir at RESUME_AT is kept for
+    test_resume_after_compactions_is_exact."""
+    base = tmp_path_factory.mktemp("deep")
+    wd = base / "wd"
+    stats = _mk(spark, wd, max_rounds=RESUME_AT).run()
+    shutil.copytree(wd, base / "at_resume")
+    eng = _mk(spark, wd)
+    stats += eng.run()
+    return eng, stats, base / "at_resume"
 
 
 def test_deep_crawl_runs_all_rounds(deep_run):
-    _, stats = deep_run
+    _, stats, _ = deep_run
     assert len(stats) == CFG.max_rounds
 
 
 def test_deep_crawl_matches_simulator(deep_run):
-    eng, _ = deep_run
+    eng, _, _ = deep_run
     got = [(r["seq"], r["url_canon"]) for r in eng.fetch_log().collect()]
     sim = simulate_crawl(eng.cfg)
     assert got == [(t[0], t[1]) for t in sim.fetch_order]
     assert {r["url_canon"] for r in eng.seen_set().collect()} == sim.seen
 
 
-def test_seen_state_rows_stay_bounded(deep_run):
-    """34 rounds append up to 34+1 epoch rows per bucket; the epoch fold
-    must keep the live table at O(n_buckets) rows and O(1) snapshot dirs
-    per bucket — not O(rounds)."""
-    eng, _ = deep_run
-    n_rows = eng.catalog.read("seen_state", eng.spark).count()
-    assert n_rows <= N_BUCKETS * (eng.SEEN_COMPACT_EPOCHS + 1), n_rows
-    n_dirs = len(eng.catalog.member_dirs("seen_state"))
+def test_seen_member_dirs_stay_bounded(deep_run):
+    """34 rounds append 34+1 snapshots to `seen`; the compaction must keep
+    the live table at O(1) snapshot dirs — not O(rounds)."""
+    eng, _, _ = deep_run
+    n_dirs = len(eng.catalog.member_dirs("seen"))
     assert n_dirs <= eng.SEEN_COMPACT_EPOCHS + 1, n_dirs
 
 
@@ -66,7 +77,7 @@ def test_frontier_deletes_never_dominate_growing_crawl(deep_run):
     stay small next to live rows — folding would be wasted rewrites), but
     the delete-member list still exists and stays one file per round, the
     O(delta) write-side contract."""
-    eng, _ = deep_run
+    eng, _, _ = deep_run
     entry = eng.catalog.snapshots("frontier")[-1]
     assert len(entry.get("delete_members", [])) <= CFG.max_rounds
 
@@ -91,15 +102,14 @@ def test_frontier_deletes_fold_on_draining_crawl(spark, tmp_path):
     assert got == [(t[0], t[1]) for t in sim.fetch_order]
 
 
-def test_resume_after_compactions_is_exact(spark, tmp_path, deep_run):
-    """Interrupt at round 20 (several seen_state folds and frontier
-    compactions in), resume to 34: fetch log must equal the uninterrupted
-    34-round run byte for byte."""
-    eng_full, _ = deep_run
-    wd = tmp_path / "resume_wd"
-    _mk(spark, wd, max_rounds=20).run()
-    eng = _mk(spark, wd)
-    eng.run()
-    want = [(r["seq"], r["url_canon"]) for r in eng_full.fetch_log().collect()]
+def test_resume_after_compactions_is_exact(spark, deep_run):
+    """Resume a copy of the crawl's workdir taken at round RESUME_AT
+    (several seen compactions and frontier folds in) to 34: the fetch log
+    must equal the simulator's, as the crawl that was continued in place
+    does."""
+    _, _, at_resume = deep_run
+    eng = _mk(spark, at_resume)
+    stats = eng.run()
+    assert len(stats) == CFG.max_rounds - RESUME_AT
     got = [(r["seq"], r["url_canon"]) for r in eng.fetch_log().collect()]
-    assert got == want
+    assert got == [(t[0], t[1]) for t in simulate_crawl(eng.cfg).fetch_order]

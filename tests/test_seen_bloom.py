@@ -1,44 +1,14 @@
 import pandas as pd
 
 from mongodb_postproc_spark.crawl.engine import CrawlEngine
-from mongodb_postproc_spark.crawl.seen import Bloom
 from mongodb_postproc_spark.crawl.simulator import simulate_crawl
 from mongodb_postproc_spark.datagen.web import CrawlConfig, WebConfig
 
 
-def test_bloom_no_false_negatives():
-    b = Bloom.sized_for(1000, 0.01)
-    urls = pd.Series([f"http://h{i % 13}.test/p/{i}" for i in range(1000)])
-    b.add(urls)
-    assert b.contains(urls).all()
-
-
-def test_bloom_fpp_reasonable():
-    b = Bloom.sized_for(1000, 0.01)
-    b.add(pd.Series([f"http://a.test/{i}" for i in range(1000)]))
-    probes = pd.Series([f"http://b.test/{i}" for i in range(5000)])
-    fpp = b.contains(probes).mean()
-    assert fpp < 0.05
-
-
-def test_bloom_serde_and_merge():
-    b1 = Bloom.sized_for(500, 0.01)
-    b2 = Bloom(b1.n_bits, b1.n_hashes)
-    u1 = pd.Series([f"http://x.test/{i}" for i in range(200)])
-    u2 = pd.Series([f"http://y.test/{i}" for i in range(200)])
-    b1.add(u1)
-    b2.add(u2)
-    r1, r2 = Bloom.from_bytes(b1.to_bytes()), Bloom.from_bytes(b2.to_bytes())
-    assert (r1.n_bits, r1.n_hashes) == (b1.n_bits, b1.n_hashes)
-    assert (r1.bits == b1.bits).all()
-    merged = r1.merge(r2)
-    assert merged.contains(u1).all() and merged.contains(u2).all()
-
-
 def test_engine_bloom_vs_exact_identical(spark, tmp_path):
-    """The Bloom is a pure prefilter: the bucketed crawl's fetch order and
-    seen set must equal the sequential simulator's exactly (false positives
-    are confirmed against the exact seen slice, never dropped)."""
+    """The bucketed crawl, whose only seen-set test is the exact
+    fingerprint slice, must equal the sequential simulator's fetch order
+    and seen set exactly."""
     cfg = CrawlConfig(
         n_seeds=5, max_rounds=2, per_host_cap=3,
         web=WebConfig(n_hosts=5, hot_pages=40, cold_pages=10, seed="bloom-v1"),
@@ -53,12 +23,16 @@ def test_engine_bloom_vs_exact_identical(spark, tmp_path):
 
 
 def test_partitioned_state_is_bucket_sliced(spark, tmp_path):
-    """The partitioned seen-state lands one bloom row per (bucket, epoch) in
-    a per-bucket dir, and the sliced loader reads only that slice — no
-    driver-side merge of the full filter anywhere in the query path."""
+    """`seen` lands in per-bucket dirs, and each bucket's fingerprint slice
+    (load_bucket_seen_hashes, read straight from those dirs) holds exactly
+    that bucket's seen URLs: every one of them is a member, no URL of
+    another bucket is, and fresh URLs are rejected."""
     import os
 
-    from mongodb_postproc_spark.crawl.seen import contains_any, load_bucket_blooms
+    from mongodb_postproc_spark.crawl.seen import (
+        load_bucket_seen_hashes,
+        seenhash_contains,
+    )
 
     cfg = CrawlConfig(
         n_seeds=8, max_rounds=2, per_host_cap=3,
@@ -67,24 +41,23 @@ def test_partitioned_state_is_bucket_sliced(spark, tmp_path):
     wd = str(tmp_path / "part_state")
     eng = CrawlEngine(spark, cfg, wd, n_buckets=4)
     eng.run()
-    dirs = eng.catalog.member_dirs("seen_state")
+    dirs = eng.catalog.member_dirs("seen")
     assert any(
         os.path.isdir(os.path.join(d, f"__pdir={b}")) for d in dirs for b in range(4)
     )
-    seen_urls = [r["url_canon"] for r in eng.seen_set().collect()]
-    # every seen URL must be bloom-positive in its own bucket slice
-    buckets = {
-        r["url_canon"]: r["b"]
-        for r in spark.createDataFrame(pd.DataFrame({"url_canon": seen_urls}))
-        .selectExpr("url_canon", "cast(pmod(hash(url_canon), 4) as int) as b")
-        .collect()
-    }
+    rows = eng.seen_set().selectExpr(
+        "url_canon", "bucket", "cast(pmod(hash(url_canon), 4) as int) as b"
+    ).collect()
+    assert all(r["bucket"] == r["b"] for r in rows)
+    fresh = pd.Series([f"http://fresh{i}.test/p/{i}" for i in range(50)])
     for b in range(4):
-        urls = pd.Series([u for u, bb in buckets.items() if bb == b])
-        if not len(urls):
-            continue
-        blooms = load_bucket_blooms(dirs, b)
-        assert contains_any(blooms, urls).all()
+        mine = pd.Series([r["url_canon"] for r in rows if r["b"] == b], dtype=object)
+        others = pd.Series([r["url_canon"] for r in rows if r["b"] != b], dtype=object)
+        slice_ab = load_bucket_seen_hashes(dirs, b)
+        assert len(slice_ab[0]) == len(mine)
+        assert seenhash_contains(slice_ab, mine).all()
+        assert not seenhash_contains(slice_ab, others).any()
+        assert not seenhash_contains(slice_ab, fresh).any()
 
 
 def test_round_plan_never_scans_seen(spark, tmp_path):

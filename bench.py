@@ -246,6 +246,20 @@ def main_default():
     spark.stop()
 
 
+def _host_facts() -> dict:
+    """The host a result was measured on: hosts differ between rounds, so
+    a number is only comparable with one from the same CPU count and
+    memory."""
+    facts = {"host_cpus": os.cpu_count()}
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+        facts["host_mem_total_mb"] = kb // 1024
+    except (OSError, StopIteration):  # no Linux meminfo
+        facts["host_mem_total_mb"] = None
+    return facts
+
+
 def main_crawl_run(cores: int, n_urls: int):
     from mongodb_postproc_spark.session import get_spark
 
@@ -255,6 +269,8 @@ def main_crawl_run(cores: int, n_urls: int):
     res = run_crawl_bench(spark, n_urls)
     res["cores"] = cores
     res["master"] = spark.sparkContext.master
+    # carried into every ladder record built from this line
+    res.update(_host_facts())
     print(json.dumps(res))
     spark.stop()
 

@@ -15,7 +15,8 @@ byte-identical fetch order:
            ──(broadcast robots join: blocked flag)──► frontier appends / blocked
   all state committed per round through the snapshot catalog (tables.py);
   _state.json (written last, atomic) pins the consistent snapshot set for
-  exact checkpoint/resume with per-partition lineage. It carries a format
+  exact checkpoint/resume with per-partition lineage, and the snapshots it
+  no longer references are expired after it. It carries a format
   stamp (STATE_FORMAT): a workdir of another format is refused, never
   migrated, and only run(resume=False) starts it over.
 
@@ -39,16 +40,17 @@ back into the data when they exceed ~2x the live row count.
 Seen-set at 10^10: `seen` is stored hash-partitioned by
 ``pmod(hash(url_canon), n_buckets)`` — Murmur3, the same function Spark's
 HashPartitioning applies — so the bucket layout ALIGNS with the dedup
-aggregate's shuffle. Candidate dedup is a min-struct hash aggregate
-(map-side combine collapses the hot host's repeated links before the
-shuffle), and the exact membership probe is a mapInPandas in that same
-stage: each task loads only its aligned buckets' sorted 128-bit
-fingerprint slices of `seen`, straight from parquet (seen.py), and emits
-only the unseen rows. Nothing is collected or broadcast through the
-driver, and no plan ever scans or shuffles the full seen table. This is
-the one seen-set path. The only variation is Iceberg's: its catalog
-reports no bucket layout for `seen`, so there the new-URL set is an
-anti-join against `seen` instead.
+aggregate's shuffle. ``n_buckets`` is that shuffle's partition count,
+fixed at init and stored in ``_state.json``. Candidate dedup is a
+min-struct hash aggregate (map-side combine collapses the hot host's
+repeated links before the shuffle), and the exact membership probe is a
+mapInPandas in that same stage: each task loads only its aligned buckets'
+sorted 128-bit fingerprint slices of `seen`, straight from parquet
+(seen.py), and emits only the unseen rows. Nothing is collected or
+broadcast through the driver, and no plan ever scans or shuffles the full
+seen table. This is the one seen-set path. The only variation is
+Iceberg's: its catalog reports no bucket layout for `seen`, so there the
+new-URL set is an anti-join against `seen` instead.
 
 Per-round counters (fetched, links, new, blocked) ride on
 ``DataFrame.observe`` attached to writes the round performs anyway — the
@@ -116,7 +118,7 @@ SALT_PREPASS_MAX_CAP = 10_000  # politeness caps are small; beyond this the cap
 
 # On-disk checkpoint format, stamped into every _state.json. A workdir of
 # any other format is refused rather than migrated (see load_state).
-STATE_FORMAT = 2
+STATE_FORMAT = 3
 
 
 def _fetch_factory(cfg: CrawlConfig, rnd: int):
@@ -186,15 +188,15 @@ def _make_probe(seen_dirs: list[str]):
     """Exact seen-set probe (mapInPandas, NO shuffle of its own): the input
     arrives already hash-partitioned by url_canon from the dedup aggregate,
     and ``bucket = pmod(hash(url), n_buckets)`` uses the same Murmur3 hash
-    as Spark's HashPartitioning — so each task sees a handful of aligned
-    bucket slices (exactly one when n_buckets == shuffle partitions) and
-    checks every row against its bucket's sorted 128-bit fingerprint slice
-    of the bucket-partitioned `seen` table (seen.load_bucket_seen_hashes —
-    16 bytes/URL flat numpy, binary-search probe, cached per python
-    worker). ``seen_dirs`` are that table's data dirs at the round's
-    snapshot. Only the unseen rows leave the task, without the bucket
-    column: no plan downstream ever joins, scans, or shuffles the full
-    seen table."""
+    as Spark's HashPartitioning — so each task sees its aligned bucket
+    slices (one per shuffle partition: init_crawl sizes n_buckets to the
+    shuffle partition count) and checks every row against its bucket's
+    sorted 128-bit fingerprint slice of the bucket-partitioned `seen` table
+    (seen.load_bucket_seen_hashes — 16 bytes/URL flat numpy, binary-search
+    probe, cached per python worker). ``seen_dirs`` are that table's data
+    dirs at the round's snapshot. Only the unseen rows leave the task,
+    without the bucket column: no plan downstream ever joins, scans, or
+    shuffles the full seen table."""
 
     import numpy as np
 
@@ -226,8 +228,13 @@ class RoundStats:
 
 
 class CrawlEngine:
+    """``n_buckets`` sizes the `seen` table's buckets of a FRESH crawl; None
+    (the default) takes ``spark.sql.shuffle.partitions``. The count is
+    stored in ``_state.json``, and every round and every resume uses the
+    stored count, whatever this engine was constructed with."""
+
     def __init__(self, spark: SparkSession, cfg: CrawlConfig, workdir: str,
-                 n_buckets: int = 64):
+                 n_buckets: int | None = None):
         self.spark = spark
         self.cfg = cfg
         self.catalog = open_catalog(workdir, spark)  # Iceberg when the runtime is present
@@ -345,12 +352,13 @@ class CrawlEngine:
         ).withColumn("__blocked", self._blocked_col()).drop("rules")
 
     # ---------------------------------------------------------------- seen
-    def _bucket_col(self):
+    @staticmethod
+    def _bucket_col(n_buckets: int):
         # F.hash IS Spark's shuffle hash (Murmur3), so pmod(hash, n) equals
         # the partition a url_canon-keyed shuffle assigns when the partition
         # count equals n — that alignment is what lets the probe run inside
         # the dedup aggregate's stage with no shuffle of its own
-        return F.pmod(F.hash("url_canon"), F.lit(self.n_buckets)).cast("int")
+        return F.pmod(F.hash("url_canon"), F.lit(n_buckets)).cast("int")
 
     def _dedup_filter_unseen(self, candidates: DataFrame, state: dict) -> DataFrame:
         """First-discovery dedup of raw link candidates + exact-unseen subset.
@@ -395,7 +403,7 @@ class CrawlEngine:
         if self.catalog.partition_layout("seen") != "bucket":
             return deduped.join(self._read("seen", state), "url_canon", "left_anti")
         seen_dirs = self.catalog.member_dirs("seen", state["snapshots"]["seen"])
-        return deduped.withColumn("bucket", self._bucket_col()).mapInPandas(
+        return deduped.withColumn("bucket", self._bucket_col(state["n_buckets"])).mapInPandas(
             _make_probe(seen_dirs), PROBE_SCHEMA
         )
 
@@ -532,6 +540,13 @@ class CrawlEngine:
             .select(*FRONTIER_COLS)
         ).localCheckpoint(eager=False)  # canonicalize+dedup+robots once, not per write
 
+        # One seen bucket per dedup shuffle partition: a probe task loads
+        # every bucket aligned to its partition, so more buckets than
+        # partitions only multiply the files each append, compaction and
+        # read touches, and no task's slice gets smaller. Stored in the
+        # state: the bucket dirs on disk fix the count for the crawl's life.
+        n_buckets = self.n_buckets or int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+
         obs_seen = Observation("init_seen")
         obs_blocked = Observation("init_blocked")
         self.catalog.create_or_replace(
@@ -546,7 +561,7 @@ class CrawlEngine:
             "seen",
             seeds.observe(obs_seen, F.count(F.lit(1)).alias("n"))
             .select("url_canon")
-            .withColumn("bucket", self._bucket_col()),
+            .withColumn("bucket", self._bucket_col(n_buckets)),
             partition_by="bucket",
         )
         self.catalog.create_or_replace(
@@ -567,6 +582,7 @@ class CrawlEngine:
             "seen_count": n_seen,
             "frontier_deletes": 0,
             "seen_epochs": 1,  # the init write is an uncompacted epoch
+            "n_buckets": n_buckets,
             "snapshots": {
                 t: self.catalog.snapshots(t)[-1]["id"]
                 for t in ("frontier", "seen", "blocked")
@@ -627,16 +643,16 @@ class CrawlEngine:
             )
             .drop("__hr", "crawl_delay_ms")
         )
+        # The fetch input AND the frontier delete file read the schedule
+        # that assign_global_seq pins EAGERLY (its one sort): that pin is
+        # the price of starting the frontier delete-file append NOW,
+        # concurrent with the fetch stage (the delete depends only on the
+        # schedule; serializing it after the round's two big stages put
+        # ~1-2 s of fixed job time on the critical path at every
+        # parallelism — pure serial-floor at 4N cores).
         sched = assign_global_seq(
             sched, ["offset_ms", "host", "url_canon"], out_col="seq", start=state["next_seq"]
         )
-        # reused by the fetch input AND the frontier delete file — plan once.
-        # EAGER: the materialization job is the price of starting the
-        # frontier delete-file append NOW, concurrent with the fetch stage
-        # (the delete depends only on the schedule; serializing it after the
-        # round's two big stages put ~1-2 s of fixed job time on the critical
-        # path at every parallelism — pure serial-floor at 4N cores).
-        sched = sched.localCheckpoint(eager=True)
         side_pool = ThreadPoolExecutor(max_workers=2)
         fut_frontier_delete = side_pool.submit(
             self.catalog.append_deletes,
@@ -833,7 +849,7 @@ class CrawlEngine:
             rows = (
                 new_urls.observe(obs_seen, F.count(F.lit(1)).alias("n"))
                 .select("url_canon")
-                .withColumn("bucket", self._bucket_col())
+                .withColumn("bucket", self._bucket_col(state["n_buckets"]))
             )
             if compact_due and self.compact_seen_state(rows):
                 return True
@@ -951,6 +967,7 @@ class CrawlEngine:
             "seen_count": seen_after,
             "frontier_deletes": frontier_deletes,
             "seen_epochs": seen_epochs,
+            "n_buckets": state["n_buckets"],
             "snapshots": {
                 t: self.catalog.snapshots(t)[-1]["id"]
                 for t in ENGINE_TABLES
@@ -958,6 +975,10 @@ class CrawlEngine:
             },
         }
         self._commit_state(new_state)
+        # only after the commit point: until the new state is on disk a
+        # crash rolls back to the old one, whose snapshots must still exist
+        for t, snap in new_state["snapshots"].items():
+            self.catalog.expire_snapshots(t, snap)
         return new_state, stats
 
     def _reconcile_to_state(self, state: dict) -> None:

@@ -159,6 +159,18 @@ class IcebergTableCatalog:
             f"snapshot_id => {int(snapshot_id)})"
         )
 
+    def expire_snapshots(self, name: str, snapshot_id: int) -> None:
+        """Expire the snapshots committed before ``snapshot_id``; Iceberg
+        deletes the files no remaining snapshot references."""
+        ids = [s["id"] for s in self.snapshots(name)]
+        older = ids[: ids.index(snapshot_id)]
+        if older:
+            self.spark.sql(
+                f"CALL {self.catalog}.system.expire_snapshots("
+                f"table => '{self.namespace}.{_ident(name)}', "
+                f"snapshot_ids => array({', '.join(str(int(i)) for i in older)}))"
+            )
+
     # ------------------------------------------------------------- metadata
     def _current_snapshot_id(self, name: str) -> int:
         snaps = self.snapshots(name)

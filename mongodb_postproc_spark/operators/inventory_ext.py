@@ -193,9 +193,9 @@ def a13_distinct_values(spark: SparkSession, sf: str) -> DataFrame:
 )
 def a16_progress_counters(spark: SparkSession, sf: str) -> DataFrame:
     # global rank without the single-partition window funnel: the crawl
-    # engine's distributed total-order assigner (range-repartition + local
-    # sort + O(partitions) offset join) — event_id is unique, so the rank is
-    # deterministic at any parallelism
+    # engine's distributed total-order assigner (one range-partitioned sort,
+    # pinned, + an O(partitions) offset join) — event_id is unique, so the
+    # rank is deterministic at any parallelism
     from mongodb_postproc_spark.crawl.ordering import assign_global_seq
 
     ranked = assign_global_seq(

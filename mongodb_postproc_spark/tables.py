@@ -11,6 +11,7 @@ jar, so this module implements the same *contract* on plain parquet:
     catalog.read(name, snapshot=k)        # time travel
     catalog.snapshots(name)               # snapshot log
     catalog.compact(name)                 # rewrite data minus deletes (maintenance)
+    catalog.expire_snapshots(name, k)     # drop dirs the view at k no longer uses
     catalog.merge_upsert(name, src, key)  # MERGE INTO ... WHEN MATCHED UPDATE
                                           #   (reference's $set-by-key idiom,
                                           #    /root/reference/analysePauling.py:51-84)
@@ -272,6 +273,32 @@ class TableCatalog:
             shutil.rmtree(self._snap_dir(name, s["id"]), ignore_errors=True)
         manifest["snapshots"] = keep
         self._commit_manifest(name, manifest)
+
+    def expire_snapshots(self, name: str, snapshot_id: int) -> None:
+        """Drop the snapshots older than ``snapshot_id`` whose data the
+        view at ``snapshot_id`` no longer references (Iceberg's
+        expire_snapshots): a ``create_or_replace`` — a compaction —
+        otherwise leaves every earlier dir on disk for good. Snapshots
+        newer than ``snapshot_id`` are left to ``rollback_to``.
+
+        The manifest is written first, then the dirs are removed, and the
+        dirs are found by listing the table dir, not the manifest: a crash
+        between the two steps leaves only dirs that the next call removes."""
+        manifest = self._load_manifest(name)
+        pinned = next(s for s in manifest["snapshots"] if s["id"] == snapshot_id)
+        live = {snapshot_id, *pinned.get("members", []), *pinned.get("delete_members", [])}
+
+        def dead(k: int) -> bool:
+            return k < snapshot_id and k not in live
+
+        keep = [s for s in manifest["snapshots"] if not dead(s["id"])]
+        if len(keep) < len(manifest["snapshots"]):
+            manifest["snapshots"] = keep
+            self._commit_manifest(name, manifest)
+        d = os.path.join(self.root, name)
+        for entry in os.listdir(d):
+            if entry.startswith("snap=") and dead(int(entry[len("snap="):])):
+                shutil.rmtree(os.path.join(d, entry), ignore_errors=True)
 
     def tables(self) -> list[str]:
         if not os.path.isdir(self.root):

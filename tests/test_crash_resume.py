@@ -162,8 +162,9 @@ def test_other_format_workdir_is_refused_until_forced_fresh(spark, tmp_path):
         state = json.load(f)
     assert state["format"] == STATE_FORMAT
 
-    # format 1 is the layout with the seen_state Bloom table
-    for stamp in (None, 1, STATE_FORMAT + 1):
+    # format 1 is the layout with the seen_state Bloom table; format 2
+    # stores no seen bucket count
+    for stamp in (None, 1, 2, STATE_FORMAT + 1):
         if stamp is None:
             state.pop("format")
         else:
@@ -176,3 +177,20 @@ def test_other_format_workdir_is_refused_until_forced_fresh(spark, tmp_path):
     eng = CrawlEngine(spark, CFG, wd)
     eng.run(resume=False)
     assert _fetch_order(eng) == simulate_crawl(CFG).fetch_order
+
+
+def test_resume_with_other_bucket_count_keeps_the_stored_one(spark, tmp_path):
+    """The seen bucket count is fixed when the crawl starts and stored in
+    the state: an engine constructed with another n_buckets resumes on the
+    stored count, so the probe reads the bucket dirs that hold each URL and
+    the crawl stays exact."""
+    wd = str(tmp_path / "rebucket")
+    two_rounds = CrawlConfig(n_seeds=6, max_rounds=2, per_host_cap=4, web=CFG.web)
+    CrawlEngine(spark, two_rounds, wd, n_buckets=4).run()
+    cfg5 = CrawlConfig(n_seeds=6, max_rounds=5, per_host_cap=4, web=CFG.web)
+    eng = CrawlEngine(spark, cfg5, wd, n_buckets=8)
+    eng.run()
+    sim = simulate_crawl(cfg5)
+    assert _fetch_order(eng) == sim.fetch_order
+    assert sorted(r["url_canon"] for r in eng.seen_set().collect()) == sorted(sim.seen)
+    assert eng.load_state()["n_buckets"] == 4

@@ -46,6 +46,12 @@ def _exercise(cat, spark):
 
     assert "t" in cat.tables()
     assert [s["id"] for s in cat.snapshots("t")]  # non-empty log
+
+    # expiring everything older than a replace leaves only that snapshot
+    snap_last = cat.create_or_replace("t", df)
+    cat.expire_snapshots("t", snap_last)
+    assert [s["id"] for s in cat.snapshots("t")] == [snap_last]
+    assert {r["k"] for r in cat.read("t", spark).collect()} == {1, 2, 3}
     cat.drop("t")
     assert not cat.exists("t")
 

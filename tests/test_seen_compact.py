@@ -4,6 +4,7 @@ at one file right after a compaction regardless of round count, and must
 leave no worker-side slice of a superseded file in the probe's cache."""
 
 import os
+import shutil
 
 import numpy as np
 
@@ -96,3 +97,56 @@ def test_slice_cache_drops_superseded_files(spark, tmp_path):
         f for b in range(N_BUCKETS) for f, _mtime in seen_mod._SEENHASH_CACHE[b][0]
     }
     assert cached and cached <= live, cached - live
+
+
+def test_fresh_engine_sizes_buckets_to_shuffle_partitions(spark, tmp_path):
+    """With no n_buckets, a fresh crawl writes one seen bucket dir per
+    shuffle partition of the dedup aggregate, and stores the count."""
+    cfg = CrawlConfig(n_seeds=200, max_rounds=1, per_host_cap=3, web=WEB)
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "derived"))
+    eng.init_crawl()
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    (snap_dir,) = eng.catalog.member_dirs("seen")
+    assert sorted(d for d in os.listdir(snap_dir) if d.startswith("__pdir=")) == sorted(
+        f"__pdir={b}" for b in range(n_part)
+    )
+    assert eng.load_state()["n_buckets"] == n_part
+
+
+def test_compaction_expires_superseded_dirs(spark, tmp_path, monkeypatch):
+    """After each round's state commit, every engine table's dirs that the
+    pinned snapshot no longer references are deleted: after a compacted
+    crawl `seen/` holds only its live dirs, a dir left by a crash between
+    the manifest write and the removal goes with the next round, and the
+    resumed crawl stays exact."""
+    from mongodb_postproc_spark.crawl.simulator import simulate_crawl
+
+    monkeypatch.setattr(CrawlEngine, "SEEN_COMPACT_EPOCHS", 2)
+    wd = tmp_path / "expire"
+    cfg = CrawlConfig(n_seeds=8, max_rounds=3, per_host_cap=3, web=WEB)
+    eng = CrawlEngine(spark, cfg, str(wd), n_buckets=N_BUCKETS)
+    eng.run()
+
+    def on_disk(t):
+        return {int(d[5:]) for d in os.listdir(wd / t) if d.startswith("snap=")}
+
+    def live(t):
+        tip = eng.catalog.snapshots(t)[-1]
+        return set(tip["members"]) | set(tip.get("delete_members", []))
+
+    # compactions ran in rounds 0 and 2: seen is one replace snapshot
+    assert on_disk("seen") == live("seen") == {eng.load_state()["snapshots"]["seen"]}
+    for t in eng.catalog.tables():
+        assert on_disk(t) == live(t), t
+
+    # a crash after the manifest write left an expired dir behind
+    shutil.copytree(wd / "seen" / f"snap={min(live('seen'))}", wd / "seen" / "snap=0")
+    cfg5 = CrawlConfig(n_seeds=8, max_rounds=5, per_host_cap=3, web=WEB)
+    eng = CrawlEngine(spark, cfg5, str(wd), n_buckets=N_BUCKETS)
+    eng.run()
+    assert on_disk("seen") == live("seen")
+    sim = simulate_crawl(cfg5)
+    assert [
+        (r["seq"], r["url_canon"], r["host"], r["round"]) for r in eng.fetch_log().collect()
+    ] == sim.fetch_order
+    assert sorted(r["url_canon"] for r in eng.seen_set().collect()) == sorted(sim.seen)

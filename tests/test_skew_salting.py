@@ -16,8 +16,7 @@ def test_skewed_running_sum_pathological_host(spark):
     import pandas as pd
     from pyspark.sql import Window
 
-    from mongodb_postproc_spark.crawl.ordering import order_bucket_column
-    from mongodb_postproc_spark.functions.skew import skewed_running_sum
+    from mongodb_postproc_spark.functions.skew import order_bucket_column, skewed_running_sum
 
     n = 20_000
     pdf = pd.DataFrame(

@@ -82,3 +82,36 @@ def test_write_rows_driver_side(spark, tmp_path):
     cat.write_rows("m", [{"round": 1, "metric": "fetched", "value": 7.0}], schema)
     got = {(r["round"], r["metric"], r["value"]) for r in cat.read("m", spark).collect()}
     assert got == {(0, "fetched", 5.0), (1, "fetched", 7.0)}
+
+
+def test_expire_drops_only_superseded_dirs(spark, tmp_path):
+    """expire_snapshots(k) drops the snapshots older than k that the view at
+    k no longer uses, manifest first; a dir left by a crash between the
+    manifest write and the removal goes on the next call."""
+    import os
+    import shutil
+
+    cat = TableCatalog(str(tmp_path))
+    cat.create_or_replace("t", _df(spark, [1, 2]))
+    cat.append("t", _df(spark, [3]))
+    keys = spark.createDataFrame(pd.DataFrame({"key": [3]}), "key int")
+    cat.append_deletes("t", keys, "key", scope="global")
+    s3 = cat.create_or_replace("t", _df(spark, [7, 8]))
+    s4 = cat.append("t", _df(spark, [9]))
+    s5 = cat.append_deletes("t", spark.createDataFrame(pd.DataFrame({"key": [8]}), "key int"),
+                            "key", scope="global")
+    s6 = cat.append("t", _df(spark, [5]))  # newer than the pinned view: kept
+
+    def dirs():
+        return sorted(int(d[5:]) for d in os.listdir(tmp_path / "t") if d.startswith("snap="))
+
+    cat.expire_snapshots("t", s5)
+    assert [s["id"] for s in cat.snapshots("t")] == [s3, s4, s5, s6]
+    assert dirs() == [s3, s4, s5, s6]
+    assert {r["key"] for r in cat.read("t", spark, snapshot=s5).collect()} == {7, 9}
+    assert {r["key"] for r in cat.read("t", spark).collect()} == {5, 7, 9}
+
+    # a crash after the manifest write left an expired dir behind
+    shutil.copytree(tmp_path / "t" / f"snap={s3}", tmp_path / "t" / "snap=1")
+    cat.expire_snapshots("t", s6)
+    assert dirs() == [s3, s4, s5, s6]
